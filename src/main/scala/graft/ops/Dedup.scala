@@ -1,9 +1,8 @@
 package graft.ops
 
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -11,10 +10,14 @@ import org.apache.spark.sql.DataFrame
   * work — never a global cross join. Candidate generation (LSH bands /
   * simhash chunks / shared rare shingles) bounds pair enumeration to
   * same-bucket pairs; exact verification runs only on candidates.
-  * Hot buckets (boilerplate / identical-content corpora) are guarded:
-  * buckets larger than `maxBucket` degrade from all-pairs to STAR
-  * candidates (every member ↔ the bucket's min id) — O(n) instead of
-  * O(n²) while preserving duplicate-cluster connectivity.
+  * Candidates come from ONE streaming kernel over key-sorted rows
+  * ([[LshUtil.groupPairs]]): LSH band buckets (q19), simhash chunks
+  * (q20) and shingle postings (q21) each take one hash exchange on the
+  * key and one pass per key group. Hot groups (boilerplate /
+  * identical-content corpora) are guarded: groups larger than the cap
+  * degrade from all-pairs to STAR candidates (the group's min id ↔
+  * its members) — O(n) instead of O(n²) while preserving
+  * duplicate-cluster connectivity.
   *
   * Signature computation (shingles, minhash, simhash) runs as typed
   * per-partition JVM kernels: these are tight per-row loops where
@@ -29,11 +32,6 @@ import org.apache.spark.sql.DataFrame
   * the 31-polynomial rolling hash it replaced.
   */
 object Dedup {
-
-  /** Operator-internal caching of diamond-consumed signature tables
-    * (see [[LshUtil.maybePersist]]); disable with
-    * `-Dgraft.ops.cache=false` for A/B measurement. */
-  private def maybePersist(df: DataFrame): DataFrame = LshUtil.maybePersist(df)
 
   /** Exact dedup: hash-groupBy on normalized content, keep the
     * smallest id as survivor. One shuffle on the content hash. */
@@ -78,28 +76,48 @@ object Dedup {
     if (w + 1 == n) arr else java.util.Arrays.copyOf(arr, w + 1)
   }
 
-  /** (id, shingles[]) — typed kernel, sorted distinct hashes.
-    * Diamond-consumed (df count, prefix window, candidate join, both
-    * verify sides) — recomputed per consumer by default, which the
-    * sf1 A/B measured as FASTER than caching (see
-    * [[LshUtil.maybePersist]] for the numbers and the opt-in). */
+  /** (id, sh): each doc's sorted distinct shingle hashes from the typed
+    * kernel, hash-partitioned on id at the session's shuffle width.
+    * Every consumer of one call reads this ONE exchange: the postings
+    * and banding flatMaps, and both exact-verify join sides (which
+    * join on the aliased id and inherit this partitioning through the
+    * alias). All of them read the table whole (a typed flatMap
+    * deserializes both columns; an explode would instead get an
+    * inferred `size(sh) > 0` filter pushed below the exchange), so the
+    * exchange subtrees stay identical, AQE reuses the stage, and the
+    * kernel runs once per call. */
   private def withShingles(docs: DataFrame, idCol: String, textCol: String,
                            k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // explicit hash(id) exchange so every consumer — banding/postings
-    // AND both exact-verify join sides (which join on aliased id and
-    // inherit this partitioning through the alias) — reuses ONE
-    // computation of the shingle kernel instead of re-scanning and
-    // re-hashing the corpus per subtree (same ReuseExchange pattern as
-    // the inverted-postings repartition; kernel cost dominates at sf1)
-    val numParts = spark.sessionState.conf.numShufflePartitions
     docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, text) => (id, shingleHashes(text, k)) })
       .toDF("id", "sh")
-      .repartition(numParts, col("id"))
-      .transform(maybePersist)
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("id"))
+  }
+
+  /** Inverted postings (shingle, id): a typed flatMap over
+    * [[withShingles]]. */
+  private def postings(sh: DataFrame): DataFrame = {
+    val spark = sh.sparkSession
+    import spark.implicits._
+    sh.as[(Long, Array[Long])]
+      .flatMap { case (id, s) => s.iterator.map(x => (x, id)) }
+      .toDF("shingle", "id")
+  }
+
+  /** The postings hash-partitioned on the shingle, and their FULL
+    * per-shingle document-frequency table. The df count is a typed
+    * groupByKey, which deserializes whole postings rows: Catalyst then
+    * prunes no column below the exchange, and the df table and the
+    * postings share ONE postings shuffle. */
+  private def postingsWithDf(sh: DataFrame): (DataFrame, DataFrame) = {
+    val spark = sh.sparkSession
+    import spark.implicits._
+    val bySh = postings(sh).repartition(
+      spark.sessionState.conf.numShufflePartitions, col("shingle"))
+    (bySh, bySh.as[(Long, Long)].groupByKey(_._1).count().toDF("shingle", "df"))
   }
 
   /** Exact Jaccard on two sorted long arrays (merge intersect). */
@@ -142,51 +160,62 @@ object Dedup {
     common.toDouble / (la + lb - common)
   }
 
-  private def bucketPairs(buckets: DataFrame, keys: Seq[String],
-                          maxBucket: Int): DataFrame =
-    LshUtil.bucketPairs(buckets, keys, maxBucket)
+  /** (id_a, id_b) of every pair [[LshUtil.groupPairs]] yields over
+    * rows in [[LshUtil.sortedGroups]] order: groups of 2..cap rows give
+    * their `admit`-ted pairs, larger groups the hub-star of `starSpan`
+    * members. Repeats across groups are left to the verify's dedup,
+    * and a repeated doc id never pairs with itself. */
+  private def candidatePairs[R](rows: Dataset[R], cap: Int, starSpan: Int, id: R => Long)(
+      sameKey: (R, R) => Boolean,
+      admit: (R, R) => Boolean = (_: R, _: R) => true): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows.mapPartitions { it =>
+      LshUtil.groupPairs(it, cap, starSpan)(sameKey, admit).collect {
+        case (a, b) if id(a) < id(b) => (id(a), id(b))
+      }
+    }.toDF("id_a", "id_b")
+  }
 
-  /** Full inverted postings (id, n = |doc's shingle set|, shingle). */
-  private def invertedPostings(sh: DataFrame): DataFrame =
-    sh.select(col("id"), size(col("sh")).as("n"),
-      explode(col("sh")).as("shingle"))
+  /** Prefix length |s| - ceil(t*|s|) + 1 of a set of size `n`
+    * (All-Pairs / PPJoin / SSJoin): under any global shingle order,
+    * two sets with Jaccard >= t share an element inside BOTH prefixes
+    * of this length. */
+  private def prefixLen(n: Column, threshold: Double): Column =
+    n - ceil(lit(threshold) * n) + 1
 
-  /** PREFIX postings (the exact prefix-filtering principle of
-    * All-Pairs / PPJoin / SSJoin): under a global shingle order —
-    * (document frequency asc, shingle asc), i.e. rarest first — any
-    * two sets with Jaccard >= t must share an element inside BOTH
-    * prefixes of length |s| - ceil(t*|s|) + 1. Indexing only prefixes
-    * is therefore LOSSLESS for the threshold join, and because the
-    * prefix keeps each doc's rarest shingles, hot shingles nearly
-    * vanish from the index: candidate work drops from
-    * sum(df^2 over all shingles) to sum(prefix-df^2) — the round-3
-    * sf1 bench measured the full-index variant going superlinear
-    * (88 s at 10x rows) exactly through that df shift. Two extra
-    * narrow shuffles (df join + per-doc rank, both spillable) buy a
-    * quadratically smaller pair stage.
-    *
-    * `dfc` is the FULL per-shingle document-frequency table (computed
-    * once by the caller and shared with the rare/over-df split, so the
-    * cap semantics cannot drift between plans). A doc's prefix is a
-    * DOWN-SET of the global order restricted to its shingles: if any
+  /** Every posting with its shingle's FULL document frequency `df` and
+    * its 1-based rank `rn` in its doc under the global order (df asc,
+    * shingle asc unsigned — the md5-hex string order the DuckDB oracle
+    * uses), i.e. rarest first. A doc's prefix (rn <= [[prefixLen]]) is
+    * then a DOWN-SET of that order restricted to its shingles: if any
     * shared shingle of a pair is in both prefixes (guaranteed for
-    * Jaccard >= t), then in particular the pair's RAREST shared
-    * shingle is — the fact the plan-equivalence proof in
-    * [[ngramJaccardPairs]] rests on. */
-  private def prefixPostings(inverted: DataFrame, dfc: DataFrame,
-                             threshold: Double): DataFrame = {
-    // the df tie-break must be the UNSIGNED shingle order (= md5-hex
-    // string order, which the DuckDB oracle uses): flip the sign bit
-    val w = Window.partitionBy("id")
-      .orderBy(col("df"), col("shingle").bitwiseXOR(lit(Long.MinValue)))
-    // keeps the full-df column: the rare/over split and the stats
-    // aggregates are plain predicates on it, so consumers never join
-    // back to the df table (cache optional — see LshUtil.maybePersist)
-    inverted.join(dfc, "shingle")
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= col("n") - ceil(lit(threshold) * col("n")) + 1)
-      .select("id", "shingle", "df", "rn", "n")
-      .transform(maybePersist)
+    * Jaccard >= t), then in particular the pair's RAREST shared shingle
+    * is — the fact the plan-equivalence proof in [[ngramJaccardPairs]]
+    * rests on. `n` is the doc's shingle count. Input is
+    * [[postingsWithDf]]; the rank is one id exchange plus a sorted
+    * streaming pass that buffers one doc's postings at a time. */
+  private def rankedPostings(bySh: DataFrame, dfc: DataFrame): DataFrame = {
+    val spark = bySh.sparkSession
+    import spark.implicits._
+    bySh.join(dfc, "shingle")
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("id"))
+      .sortWithinPartitions(col("id"), col("df"), col("shingle").bitwiseXOR(lit(Long.MinValue)))
+      .select("shingle", "id", "df")
+      .as[(Long, Long, Long)]
+      .mapPartitions { rows =>
+        val it = rows.buffered
+        new Iterator[Iterator[(Long, Long, Int, Long, Int)]] {
+          def hasNext: Boolean = it.hasNext
+          def next(): Iterator[(Long, Long, Int, Long, Int)] = {
+            val id = it.head._2
+            val doc = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]
+            while (it.hasNext && it.head._2 == id) doc += it.next()
+            val n = doc.length
+            doc.iterator.zipWithIndex.map { case ((s, _, df), i) => (s, id, n, df, i + 1) }
+          }
+        }.flatten
+      }.toDF("shingle", "id", "n", "df", "rn")
   }
 
   /** Bytes-per-document divisor for the size-based plan gate below:
@@ -222,31 +251,37 @@ object Dedup {
     * index: candidates = pairs sharing a prefix shingle whose FULL
     * document frequency lies in [2, maxDf], verified with EXACT
     * Jaccard over the full shingle sets. Prefix filtering is lossless
-    * (see [[prefixPostings]]); the only recall cut is the maxDf cap,
+    * (see [[rankedPostings]]); the only recall cut is the maxDf cap,
     * and shingles past it no longer vanish silently (a duplicate
     * cluster larger than maxDf shares ONLY over-df shingles): each
-    * over-df shingle contributes STAR candidates from the first maxDf
-    * ids of its FULL posting list to its min id — bounded recall
+    * over-df shingle contributes STAR candidates from its min id to
+    * the next maxDf ids of its FULL posting list — bounded recall
     * recovery; the remaining bound is quantified by
     * [[ngramShingleStats]].
     *
-    * ADAPTIVE plan choice: the prefix filter's two extra narrow
-    * shuffles (df join + per-doc rank) cost a ~1.5 s constant that
-    * only pays off once the pair stage would otherwise dominate — the
-    * sf1 bench measured full-index 88 s vs prefix 16 s at 50k docs,
-    * while at 5k docs prefix is pure overhead. Below `prefixMinDocs`
-    * (decided from plan statistics — see [[estimatedDocs]]; pass
-    * `numDocsHint` when the caller knows the cardinality; no count()
-    * job either way) the FULL inverted index is used instead.
+    * Both plans run the postings through the one candidate kernel
+    * ([[LshUtil.groupPairs]] with cap = starSpan = maxDf) after a
+    * single shingle exchange sorted by (shingle, id): a posting group
+    * IS the shingle's df, so groups of 2..maxDf give the rare pairs and
+    * larger groups the star, and the full plan needs no df table.
+    *
+    * ADAPTIVE plan choice: the prefix plan's df join and per-doc rank
+    * cost two extra postings shuffles that only pay off once the pair
+    * stage would otherwise dominate — the sf1 bench measured
+    * full-index 88 s vs prefix 16 s at 50k docs, while at 5k docs
+    * prefix is pure overhead. Below `prefixMinDocs` (decided from plan
+    * statistics — see [[estimatedDocs]]; pass `numDocsHint` when the
+    * caller knows the cardinality; no count() job either way) the FULL
+    * inverted index is used instead. The prefix plan feeds the kernel
+    * the prefix rows of in-cap shingles plus the whole posting list of
+    * every over-df shingle, and checks each rare pair with the PPJoin
+    * positional filter inside the kernel.
     *
     * The EMITTED SET is identical on either plan (pinned by two
     * OpsSpec properties, including one whose maxDf actually binds):
-    *  - both plans split rare/over-df shingles on the SAME table —
-    *    the full per-shingle df (the prefix plan needs it anyway for
-    *    its global order, the full plan's posting groupBy IS it), so
-    *    a shingle is never "rare" on one plan and "over" on the
-    *    other (the round-4 defect: the cap applied to prefix-df on
-    *    one plan and full-df on the other);
+    *  - both plans split rare/over-df shingles on the full per-shingle
+    *    df (the posting-group size), so a shingle is never "rare" on
+    *    one plan and "over" on the other;
     *  - the over-df star is built from the FULL posting list on both
     *    plans — identical input, identical star pairs;
     *  - for the rare path, the prefix plan's candidates are a subset
@@ -254,7 +289,7 @@ object Dedup {
     *    Jaccard >= t sharing any rare shingle also has its RAREST
     *    shared shingle rare (df-ascending order), and that shingle is
     *    in both prefixes (prefix-filter lemma + prefixes are
-    *    down-sets of the order — see [[prefixPostings]]), so the
+    *    down-sets of the order — see [[rankedPostings]]), so the
     *    prefix plan emits the pair through it; every extra full-plan
     *    candidate below threshold dies in the exact verify.
     *
@@ -266,91 +301,40 @@ object Dedup {
                         k: Int = 5, maxDf: Int = 100,
                         prefixMinDocs: Int = 20000,
                         numDocsHint: Long = -1L): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
     val sh = withShingles(docs, idCol, textCol, k)
     val usePrefix = prefixMinDocs == 0 ||
       (prefixMinDocs != Int.MaxValue &&
         estimatedDocs(docs, numDocsHint) >= prefixMinDocs)
-    // three consumers (df count, prefix/full postings, over-df star)
-    // used to re-explode the shingle arrays each (the broadcast-join
-    // plans left no common exchange to reuse); an explicit shingle
-    // repartition gives all of them ONE identical Exchange subtree
-    // that ReuseExchange/AQE stage reuse collapses, so the shingle
-    // kernel + explode run once per query instead of 3-4x.
-    // -Dgraft.ops.cache=true persists a copy instead (recompute
-    // measured FASTER at sf1 than the columnar cache — the round-3
-    // negative result — so caching stays opt-in). Width pinned to the
-    // session's shuffle-partition knob, not AQE's small-input floor:
-    // every downstream join/groupBy of this operator runs on these
-    // partitions.
-    val numParts = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val inverted = invertedPostings(sh)
-      .repartition(numParts, col("shingle"))
-      .transform(maybePersist)
-    // FULL per-shingle document frequency — the single df table both
-    // the plan gate's rare/over split and the prefix order use
-    val dfc = inverted.groupBy("shingle").agg(count(lit(1)).as("df"))
-    // both plans carry the FULL per-shingle df on the postings
-    // (prefixPostings keeps it; the full plan joins it on the shared
-    // shingle partitioning — no exchange), so the rare split below is
-    // a plain predicate instead of a join back to the df table
-    val pre =
-      if (usePrefix) prefixPostings(inverted, dfc, threshold)
-      else inverted.join(dfc, "shingle").select("id", "shingle", "df")
-    // rare path: filter to in-cap shingles BEFORE collecting, so no
-    // aggregation buffer ever exceeds maxDf entries
-    val rare = pre.where(col("df") <= maxDf && col("df") >= 2)
     val cand =
       if (usePrefix) {
-        // PPJoin POSITIONAL filter (lossless, prefix plan only — the
-        // full plan has no rank column): a candidate survives iff SOME
-        // generating shingle admits the overlap upper bound
-        //   1 + min(n_a - rn_a, n_b - rn_b) >= floor(t*(n_a+n_b)/(1+t))
-        // where rn is the shingle's 1-based position in the doc's
-        // full (df asc, shingle unsigned asc) order and n the doc's
-        // shingle count. Lossless: for a TRUE pair (jaccard >= t),
-        // every shared shingle sorts at or after the pair's RAREST
+        val (bySh, dfc) = postingsWithDf(sh)
+        val rows = rankedPostings(bySh, dfc)
+          .where((col("df").between(2, maxDf) && col("rn") <= prefixLen(col("n"), threshold)) ||
+            col("df") > maxDf)
+          .select("shingle", "id", "rn", "n")
+        // PPJoin POSITIONAL filter (lossless) on each rare pair: it
+        // survives iff 1 + min(n_a - rn_a, n_b - rn_b) >=
+        // floor(t*(n_a+n_b)/(1+t)), where rn is the shingle's 1-based
+        // position in the doc's (df asc, shingle unsigned asc) order
+        // and n the doc's shingle count. For a TRUE pair (jaccard >=
+        // t) every shared shingle sorts at or after the pair's RAREST
         // shared shingle s in both docs, so at s the bound counts all
         // shared elements — 1 + min(...) >= overlap >= the floor()
         // requirement (same conservative floor as jaccardSortedMin) —
         // and s is in-cap and in both prefixes whenever the rare path
-        // emits the pair at all (the down-set argument above), so the
-        // pair is generated AT s and passes there. Pairs pruned here
-        // provably fail the exact verify, so the emitted set is
-        // unchanged (pinned by the brute-force and prefix==full
-        // OpsSpec properties); what it buys is a smaller pair-dedup
-        // shuffle and fewer verify-join merges.
-        val lists = rare.groupBy("shingle")
-          .agg(collect_list(struct(col("id"), col("rn"), col("n"))).as("ps"))
-        val need = floor(lit(threshold) * (col("a.n") + col("b.n")) /
-          lit(1.0 + threshold))
-        lists
-          .select(explode(col("ps")).as("a"), col("ps"))
-          .select(col("a"), explode(col("ps")).as("b"))
-          .where(col("a.id") < col("b.id") &&
-            lit(1) + least(col("a.n") - col("a.rn"), col("b.n") - col("b.rn")) >= need)
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      } else {
-        val lists = rare.groupBy("shingle").agg(collect_list("id").as("ids"))
-        lists
-          .select(explode(col("ids")).as("id_a"), col("ids"))
-          .select(col("id_a"), explode(col("ids")).as("id_b"))
-          .where(col("id_a") < col("id_b"))
-      }
-    // over-df recovery: star from the shingle's min id to its first
-    // maxDf FULL-posting ids — windowed (sort-based, spillable), never
-    // a collect_list of an unbounded posting list; built from the full
-    // inverted postings on BOTH plans so the stars are identical
-    val overKeys = dfc.where(col("df") > maxDf).select("shingle")
-    val w = Window.partitionBy("shingle").orderBy("id")
-    val star = inverted.select("id", "shingle").join(overKeys, "shingle")
-      .withColumn("rn", row_number().over(w))
-      .withColumn("hub", min("id").over(w)) // prefix min on sorted ids = global min
-      .where(col("rn") <= maxDf + 1 && col("id") =!= col("hub"))
-      .select(col("hub").as("id_a"), col("id").as("id_b"))
-    verifyJaccard(
-      cand.select("id_a", "id_b").union(star.select("id_a", "id_b"))
-        .dropDuplicates("id_a", "id_b"),
-      sh, threshold)
+        // emits the pair at all, so the pair is generated AT s and
+        // passes there. Pruned pairs provably fail the exact verify.
+        candidatePairs(LshUtil.sortedGroups(rows, "shingle").as[(Long, Long, Int, Int)],
+            maxDf, maxDf, (r: (Long, Long, Int, Int)) => r._2)(
+          _._1 == _._1,
+          (a, b) => 1 + math.min(a._4 - a._3, b._4 - b._3) >=
+            math.floor(threshold * (a._4 + b._4) / (1.0 + threshold)))
+      } else
+        candidatePairs(LshUtil.sortedGroups(postings(sh), "shingle")
+            .as[(Long, Long)], maxDf, maxDf, (r: (Long, Long)) => r._2)(_._1 == _._1)
+    verifyJaccard(cand, sh, threshold)
   }
 
   /** Recall instrumentation for [[ngramJaccardPairs]] (one row),
@@ -366,40 +350,37 @@ object Dedup {
     * prefixes (see [[ngramJaccardPairs]]), indexing the doc. That is
     * the documented recall bound, tied to ground truth by the OpsSpec
     * star-recall property. `threshold` must match the pair join being
-    * instrumented. */
+    * instrumented. The df table and the ranked postings both come from
+    * the call's one shingle exchange. */
   def ngramShingleStats(docs: DataFrame, threshold: Double = 0.8,
                         idCol: String = "doc_id",
                         textCol: String = "text", k: Int = 5,
                         maxDf: Int = 100): DataFrame = {
     val sh = withShingles(docs, idCol, textCol, k)
-    // same single-exchange sharing as ngramJaccardPairs (see there)
-    val inverted = invertedPostings(sh)
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("shingle"))
-    val dfc = inverted.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val pre = prefixPostings(inverted, dfc, threshold)
-    // three aggregation branches instead of the previous five-branch
-    // shape (distinct-prefix count, over-df aggs, plus a sh-distinct
-    // anti-join for the unindexed docs): n_docs_unindexed is counted
-    // as (all docs) − (docs with an in-cap prefix posting) — every
-    // doc has ≥ 1 shingle, so distinct ids over the postings ARE the
-    // doc count. Same values, fewer stages (q28's sf0.1 cost was
-    // stage-count latency, not compute).
-    val preAgg = pre.agg(
-      count_distinct(col("shingle")).as("n_shingles"),
-      count_distinct(when(col("df") <= maxDf && col("df") >= 2, col("id")))
-        .as("n_docs_indexed"))
+    val (bySh, dfc) = postingsWithDf(sh)
+    val inPrefix = col("rn") <= prefixLen(col("n"), threshold)
+    // two aggregation branches: n_docs_unindexed is (all docs) − (docs
+    // with an in-cap prefix posting), and every doc has >= 1 shingle,
+    // so its rank-1 postings count the docs
+    val postAgg = rankedPostings(bySh, dfc).agg(
+      count_distinct(when(inPrefix, col("shingle"))).as("n_shingles"),
+      count_distinct(when(inPrefix && col("df").between(2, maxDf), col("id")))
+        .as("n_docs_indexed"),
+      count(when(col("rn") === 1, 1)).as("n_docs"))
     // over-df stats come from the GLOBAL df table — the same key set
     // the pair join's star path degrades, prefix-present or not
     val overAgg = dfc.agg(
       sum(when(col("df") > maxDf, 1L).otherwise(0L)).as("n_overdf"),
       sum(when(col("df") > maxDf, col("df")).otherwise(0L)).as("overdf_mass"))
-    val docAgg = inverted.agg(count_distinct(col("id")).as("n_docs"))
-    preAgg.crossJoin(overAgg).crossJoin(docAgg)
+    postAgg.crossJoin(overAgg)
       .select(col("n_shingles"), col("n_overdf"), col("overdf_mass"),
         (col("n_docs") - col("n_docs_indexed")).as("n_docs_unindexed"))
   }
 
+  /** Exact-Jaccard verify of candidate (id_a, id_b) rows, repeats
+    * included; the dedup keeps its map-side partial aggregation. The
+    * dedup shuffle is left to AQE's sizing: pinning it at the session's
+    * width splits a small result into that many output files. */
   private def verifyJaccard(cand: DataFrame, sh: DataFrame,
                             threshold: Double): DataFrame = {
     val a = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
@@ -408,7 +389,8 @@ object Dedup {
     // early-exit (-1.0, filtered) for provably-below candidates
     val jUdf = udf((x: Array[Long], y: Array[Long]) =>
       jaccardSortedMin(x, y, threshold))
-    cand.join(a, "id_a").join(b, "id_b")
+    cand.dropDuplicates("id_a", "id_b")
+      .join(a, "id_a").join(b, "id_b")
       .withColumn("jaccard", jUdf(col("sh_a"), col("sh_b")))
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
@@ -435,10 +417,10 @@ object Dedup {
   }
 
   /** MinHash + LSH banding: `m` minhashes in `bands` bands; docs
-    * sharing any band bucket are candidates (hot buckets degrade to
-    * star pairs past `maxBucket`); candidates verified with exact
-    * Jaccard on the full shingle sets. Two shuffles (bucket groupBy,
-    * verify join) — no O(n²). */
+    * sharing any band bucket are candidates (buckets past `maxBucket`
+    * degrade to hub-star pairs with every member); candidates verified
+    * with exact Jaccard on the full shingle sets. One sorted exchange
+    * on (band, bucket) feeds the candidate kernel — no O(n²). */
   def minhashLshPairs(docs: DataFrame, threshold: Double = 0.8,
                       idCol: String = "doc_id", textCol: String = "text",
                       k: Int = 5, m: Int = 32, bands: Int = 8,
@@ -448,7 +430,7 @@ object Dedup {
     val rows = m / bands
     val sh = withShingles(docs, idCol, textCol, k)
     val banded = sh.as[(Long, Array[Long])]
-      .mapPartitions(_.flatMap { case (id, s) =>
+      .flatMap { case (id, s) =>
         val sig = minhashSig(s, m)
         (0 until bands).iterator.map { b =>
           var h = b.toLong
@@ -456,9 +438,12 @@ object Dedup {
           while (r < rows) { h = mix64(h ^ sig(b * rows + r)); r += 1 }
           (id, b, h)
         }
-      }).toDF("id", "band", "bucket")
-    verifyJaccard(bucketPairs(banded, Seq("band", "bucket"), maxBucket),
-      sh, threshold)
+      }.toDF("id", "band", "bucket")
+    val cand = candidatePairs(
+      LshUtil.sortedGroups(banded, "band", "bucket").as[(Long, Int, Long)],
+      maxBucket, Int.MaxValue, (r: (Long, Int, Long)) => r._1)(
+      (x, y) => x._2 == y._2 && x._3 == y._3)
+    verifyJaccard(cand, sh, threshold)
   }
 
   /** 64-bit SimHash over whitespace tokens (typed kernel). Bit b of
@@ -489,9 +474,8 @@ object Dedup {
     * chunk bucket exceeds `maxBucket` (hot buckets degrade to star
     * pairs, trading non-hub pair recall for bounded work; raise
     * maxBucket when exactness matters more than skew safety).
-    * Bucket-join on (chunk index, value), then verify true hamming
-    * (sim values re-joined by id AFTER pair dedup — the candidate
-    * shuffle carries only ids). */
+    * One sorted exchange on (chunk index, value), the true hamming per
+    * same-bucket pair, then an id-pair dedup. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
                    idCol: String = "doc_id", textCol: String = "text",
                    maxBucket: Int = 2000): DataFrame = {
@@ -505,12 +489,13 @@ object Dedup {
     val widths = (0 until nChunks).map(c => if (c < rem) base + 1 else base)
     val offsets = widths.scanLeft(0)(_ + _).init
     // chunk rows CARRY the 8-byte simhash into their buckets, and the
-    // hamming is computed cell-locally in one streaming pass per
-    // bucket (same shape as Similarity.bucketCosPairs: all pairs for
-    // buckets <= maxBucket, hub-star past it, task memory bounded at
-    // maxBucket + 1 rows). The previous id-pairs shape joined the sim
-    // table back onto the candidate set twice; for an 8-byte payload,
-    // carrying it beats two join shuffles at any scale.
+    // hamming is computed cell-locally by the candidate kernel (all
+    // pairs for buckets <= maxBucket, hub-star past it, task memory
+    // bounded at maxBucket + 1 rows). The previous id-pairs shape
+    // joined the sim table back onto the candidate set twice; for an
+    // 8-byte payload, carrying it beats two join shuffles at any
+    // scale. Duplicate pairs across chunks carry the identical
+    // hamming, so keeping any one row is exact.
     val chunked = docs
       .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
       .as[(Long, String)]
@@ -524,71 +509,14 @@ object Dedup {
           (id, c, (sim >>> offsets(c)) & mask, sim)
         }
       })
-    chunkLocalHamming(chunked, maxBucket)
+    LshUtil.sortedGroups(chunked.toDF("id", "chunk", "val", "sim"), "chunk", "val")
+      .as[(Long, Int, Long, Long)]
+      .mapPartitions(LshUtil.groupPairs(_, maxBucket, Int.MaxValue)(
+          (x, y) => x._2 == y._2 && x._3 == y._3)
+        .map { case (a, b) => (a._1, b._1, java.lang.Long.bitCount(a._4 ^ b._4)) })
+      .toDF("id_a", "id_b", "hamming")
+      .dropDuplicates("id_a", "id_b")
       .where(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
-  }
-
-  /** Distinct same-bucket pair hammings from (id, chunk, val, sim)
-    * rows — the cell-local combine of [[simhashPairs]]: one hash
-    * exchange on (chunk, val) with a secondary sort on id, a
-    * streaming pass per bucket (all pairs <= maxBucket, hub-star
-    * beyond, bounded buffering), then an id-pair dedup. Duplicate
-    * pairs across chunks carry the identical hamming, so keeping any
-    * one row is exact. */
-  private def chunkLocalHamming(rows: org.apache.spark.sql.Dataset[(Long, Int, Long, Long)],
-                                maxBucket: Int): DataFrame = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val parts = spark.sessionState.conf.numShufflePartitions
-    rows.toDF("id", "chunk", "val", "sim")
-      .repartition(parts, col("chunk"), col("val"))
-      .sortWithinPartitions("chunk", "val", "id")
-      .as[(Long, Int, Long, Long)]
-      .mapPartitions { rs =>
-        val bit = rs.buffered
-        new Iterator[(Long, Long, Int)] {
-          private var out: Iterator[(Long, Long, Int)] = Iterator.empty
-          private def advance(): Unit =
-            while (!out.hasNext && bit.hasNext) {
-              val chunk = bit.head._2
-              val v = bit.head._3
-              val buf = new scala.collection.mutable.ArrayBuffer[(Long, Long)]
-              while (bit.hasNext && bit.head._2 == chunk && bit.head._3 == v &&
-                     buf.length <= maxBucket) {
-                val r = bit.next()
-                buf += ((r._1, r._4))
-              }
-              if (buf.length <= maxBucket) {
-                val k = buf.length
-                out = (0 until k).iterator.flatMap { i =>
-                  val (ia, sa) = buf(i)
-                  ((i + 1) until k).iterator.map { j =>
-                    val (ib, sb) = buf(j)
-                    (ia, ib, java.lang.Long.bitCount(sa ^ sb))
-                  }
-                }
-              } else {
-                val (hid, hsim) = buf(0)
-                val bufStars = (1 until buf.length).iterator.map { i =>
-                  val (ib, sb) = buf(i)
-                  (hid, ib, java.lang.Long.bitCount(hsim ^ sb))
-                }
-                val restStars = new Iterator[(Long, Long, Int)] {
-                  def hasNext: Boolean =
-                    bit.hasNext && bit.head._2 == chunk && bit.head._3 == v
-                  def next(): (Long, Long, Int) = {
-                    val r = bit.next()
-                    (hid, r._1, java.lang.Long.bitCount(hsim ^ r._4))
-                  }
-                }
-                out = bufStars ++ restStars
-              }
-            }
-          def hasNext: Boolean = { advance(); out.hasNext }
-          def next(): (Long, Long, Int) = { advance(); out.next() }
-        }
-      }.toDF("id_a", "id_b", "hamming")
-      .dropDuplicates("id_a", "id_b")
   }
 }

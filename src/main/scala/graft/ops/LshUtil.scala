@@ -11,30 +11,9 @@ import org.apache.spark.sql.functions._
   * bucketed operator). */
 object LshUtil {
 
-  /** The effective operator-cache flag — the ONE place the
-    * `graft.ops.cache` default lives, so A/B tooling (QueryBench)
-    * can never print a label that disagrees with the behavior. */
-  def cacheEnabled: Boolean =
-    sys.props.getOrElse("graft.ops.cache", "false").toBoolean
-
   val md5Local: ThreadLocal[MessageDigest] = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
-
-  /** OPTIONAL persistence of diamond-consumed derived tables
-    * (signature/norm tables feed 3-6 downstream scans each).
-    * Default OFF — measured with `graft.tools.QueryBench` on the sf1
-    * corpus (interleaved A/B, same windows): caching made q34 8x
-    * SLOWER (180 s vs 22 s) and q21 ~1.4x slower — the per-row
-    * kernels are cheap enough that recomputation beats the
-    * columnar-cache round-trip plus the whole-stage-codegen and AQE
-    * boundaries an InMemoryRelation introduces. The hook stays for
-    * deployments where the upstream scan is genuinely expensive
-    * (remote storage, wide rows): `-Dgraft.ops.cache=true`. */
-  def maybePersist(df: DataFrame): DataFrame =
-    if (cacheEnabled)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
 
   /** First 8 bytes of MD5(s), big-endian — the same 64 bits DuckDB's
     * `substr(md5(s), 1, 16)` hex-encodes, so set cardinalities and
@@ -106,50 +85,71 @@ object LshUtil {
       ((o(6) & 0xFFL) << 8) | (o(7) & 0xFFL)
   }
 
-  /** Same-bucket candidate pairs with a hot-bucket guard.
-    * Input rows: (id, keys...). Buckets of size <= maxBucket
-    * contribute ALL intra-bucket pairs; larger buckets contribute
-    * STAR pairs (member ↔ bucket min id) — bounded O(bucket) instead
-    * of O(bucket²), preserving duplicate-cluster connectivity through
-    * the hub while trading away non-hub pair recall (operators
-    * document this cap; verification stages only ever shrink the
-    * candidate set further). Returns distinct (id_a < id_b).
-    *
-    * Plan shape (round 6): bucket size/hub come from WINDOW aggregates
-    * over ONE hash exchange on the bucket keys instead of a groupBy +
-    * join-back. The join-back version referenced `buckets` from four
-    * physical subtrees with no common exchange (the stats join
-    * broadcasts locally), so the signature lineage feeding this —
-    * shingles + minhash for q19, simhash for q20, RHP banding or IVF
-    * assignment for q23/q29/q30/q34/q35 — was recomputed per subtree
-    * (q30's executed plan carried 28 parquet scans). Both remaining
-    * branches (small-bucket pairs, hot-bucket star) hang off the SAME
-    * Exchange(hash(keys)) node, which ReuseExchange/AQE stage reuse
-    * collapses to one computation. The small-bucket collect_list is
-    * bounded by maxBucket, and the pair expansion is generator-only
-    * (no join): the one remaining shuffle after the window is the
-    * (id_a, id_b) dedup, which carries ids ONLY. */
-  def bucketPairs(buckets: DataFrame, keys: Seq[String],
-                  maxBucket: Int): DataFrame = {
-    val kc = keys.map(col)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(kc: _*)
-    val tagged = buckets
-      .withColumn("bkt_n", count(lit(1)).over(w))
-      .withColumn("bkt_hub", min(col("id")).over(w))
-    // small buckets: ids gathered per bucket (<= maxBucket elements by
-    // the filter), pairs expanded in place — no self-join, and the
-    // groupBy reuses the window's hash partitioning (no new exchange)
-    val small = tagged.where(col("bkt_n") <= maxBucket)
-      .groupBy(kc: _*).agg(collect_list(col("id")).as("ids"))
-    val allPairs = small
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    // hub = min id, so star pairs already satisfy id_a < id_b
-    val star = tagged
-      .where(col("bkt_n") > maxBucket && col("id") =!= col("bkt_hub"))
-      .select(col("bkt_hub").as("id_a"), col("id").as("id_b"))
-    allPairs.union(star).dropDuplicates("id_a", "id_b")
+  /** Rows hash-partitioned on `keys` and sorted by (keys…, id) within
+    * each partition: the input shape of [[groupPairs]]. The width is
+    * the session's `spark.sql.shuffle.partitions`, not AQE's
+    * small-input floor, so a small candidate stage still runs at full
+    * parallelism. */
+  def sortedGroups(rows: DataFrame, keys: String*): DataFrame =
+    rows.repartition(rows.sparkSession.sessionState.conf.numShufflePartitions,
+        keys.map(col): _*)
+      .sortWithinPartitions((keys :+ "id").map(col): _*)
+
+  /** The streaming candidate kernel of every bucketed operator, over
+    * rows in [[sortedGroups]] order (each key group contiguous, ids
+    * ascending and distinct within a group):
+    *  - a group of at most `cap` rows yields each of its pairs that
+    *    `admit` accepts, earlier row first, so id_a < id_b;
+    *  - a larger group is a hot bucket and yields hub-star pairs only:
+    *    its first row (the min id) with each of the next `starSpan`
+    *    rows, the rest of the group skipped. Star pairs bypass `admit`.
+    * A task buffers at most cap + 1 rows however large a group is, and
+    * the pair work per hot group is O(group) instead of O(group²),
+    * while the hub keeps a duplicate cluster connected. */
+  def groupPairs[R](rows: Iterator[R], cap: Int, starSpan: Int)(
+      sameKey: (R, R) => Boolean,
+      admit: (R, R) => Boolean = (_: R, _: R) => true): Iterator[(R, R)] = {
+    val it = rows.buffered
+    new Iterator[(R, R)] {
+      private val buf = new scala.collection.mutable.ArrayBuffer[R]
+      private var star = false
+      private var i = 0 // all-pairs cursor: (buf(i), buf(j))
+      private var j = 1
+      private var left = 0 // star pairs still to emit in this group
+      private var pending: (R, R) = null
+
+      private def advance(): (R, R) = {
+        while (true) {
+          if (star) {
+            if (left > 0 && j < buf.length) { left -= 1; j += 1; return (buf(0), buf(j - 1)) }
+            if (left > 0 && it.hasNext && sameKey(buf(0), it.head)) { left -= 1; return (buf(0), it.next()) }
+            while (it.hasNext && sameKey(buf(0), it.head)) it.next()
+            star = false
+            buf.clear()
+          } else if (i < buf.length - 1) {
+            if (j < buf.length) {
+              j += 1
+              if (admit(buf(i), buf(j - 1))) return (buf(i), buf(j - 1))
+            } else { i += 1; j = i + 1 }
+          } else if (!it.hasNext) return null
+          else {
+            buf.clear()
+            buf += it.next()
+            while (buf.length <= cap && it.hasNext && sameKey(buf(0), it.head)) buf += it.next()
+            star = buf.length > cap
+            i = 0; j = 1; left = starSpan
+          }
+        }
+        null
+      }
+
+      def hasNext: Boolean = { if (pending == null) pending = advance(); pending != null }
+      def next(): (R, R) = {
+        if (!hasNext) throw new NoSuchElementException("no more candidate pairs")
+        val p = pending
+        pending = null
+        p
+      }
+    }
   }
 }

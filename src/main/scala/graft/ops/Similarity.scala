@@ -58,14 +58,14 @@ object Similarity {
     import spark.implicits._
     // diamond-consumed (banding/centroid assignment + both cosine
     // verify sides + the centroid sample); recomputation measured
-    // faster than caching — see LshUtil.maybePersist
+    // faster than caching (q34 8x, q21 1.4x slower with a persisted
+    // copy at sf1)
     vecs.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .as[(Long, Array[Float])]
       .mapPartitions(_.map { case (id, v) =>
         val n = math.sqrt(dotF(v, v))
         (id, v, if (n == 0.0) 1.0 else n)
       }).toDF("id", "v", "nrm")
-      .transform(LshUtil.maybePersist)
   }
 
   private def rankTopK(pairs: DataFrame, k: Int): DataFrame = {
@@ -140,57 +140,12 @@ object Similarity {
                              maxBucket: Int): DataFrame = {
     val spark = banded.sparkSession
     import spark.implicits._
-    val parts = spark.sessionState.conf.numShufflePartitions
-    banded.toDF("id", "band", "bucket", "v", "nrm")
-      .repartition(parts, col("band"), col("bucket"))
-      .sortWithinPartitions("band", "bucket", "id")
+    LshUtil.sortedGroups(banded.toDF("id", "band", "bucket", "v", "nrm"), "band", "bucket")
       .as[(Long, Int, Long, Array[Float], Double)]
-      .mapPartitions { rows =>
-        val bit = rows.buffered
-        new Iterator[(Long, Long, Double)] {
-          private var out: Iterator[(Long, Long, Double)] = Iterator.empty
-          private def advance(): Unit =
-            while (!out.hasNext && bit.hasNext) {
-              val band = bit.head._2
-              val bucket = bit.head._3
-              val buf = new scala.collection.mutable.ArrayBuffer[(Long, Array[Float], Double)]
-              while (bit.hasNext && bit.head._2 == band && bit.head._3 == bucket &&
-                     buf.length <= maxBucket) {
-                val r = bit.next()
-                buf += ((r._1, r._4, r._5))
-              }
-              if (buf.length <= maxBucket) {
-                // complete small bucket (ids ascending): all pairs i < j
-                val k = buf.length
-                out = (0 until k).iterator.flatMap { i =>
-                  val (ia, va, na) = buf(i)
-                  ((i + 1) until k).iterator.map { j =>
-                    val (ib, vb, nb) = buf(j)
-                    (ia, ib, dotF(va, vb) / (na * nb))
-                  }
-                }
-              } else {
-                // hot bucket (> maxBucket members): star pairs only
-                val (hid, hv, hn) = buf(0)
-                val bufStars = (1 until buf.length).iterator.map { i =>
-                  val (ib, vb, nb) = buf(i)
-                  (hid, ib, dotF(hv, vb) / (hn * nb))
-                }
-                val restStars = new Iterator[(Long, Long, Double)] {
-                  def hasNext: Boolean =
-                    bit.hasNext && bit.head._2 == band && bit.head._3 == bucket
-                  def next(): (Long, Long, Double) = {
-                    val r = bit.next()
-                    (hid, r._1, dotF(hv, r._4) / (hn * r._5))
-                  }
-                }
-                out = bufStars ++ restStars
-              }
-            }
-          def hasNext: Boolean = { advance(); out.hasNext }
-          def next(): (Long, Long, Double) = { advance(); out.next() }
-        }
-      }.toDF("id_a", "id_b", "cos")
+      .mapPartitions(LshUtil.groupPairs(_, maxBucket, Int.MaxValue)(
+          (x, y) => x._2 == y._2 && x._3 == y._3)
+        .map { case (a, b) => (a._1, b._1, dotF(a._4, b._4) / (a._5 * b._5)) })
+      .toDF("id_a", "id_b", "cos")
       .dropDuplicates("id_a", "id_b")
   }
 

@@ -3,10 +3,13 @@ package graft.spark
 import graft.canon.{CanonOptions, HndqCallLimitExceededException, Rdfc10}
 import graft.rdf.Quad
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** One quad tagged with the graph (partition) key it belongs to.
   * In the KG pipeline the key is the repo; for fixture I/O it is a
-  * document id.
+  * document id. A document without quads is carried as one
+  * [[KeyedQuad.placeholder]] row, so its key survives the parse and
+  * canonicalizes to the empty graph.
   */
 final case class KeyedQuad(
     key: String,
@@ -16,11 +19,19 @@ final case class KeyedQuad(
     gKind: Byte, g: String
 ) {
   def quad: Quad = Quad(sKind, s, p, oKind, o, oDt, oLang, gKind, g)
+  def isPlaceholder: Boolean = sKind == KeyedQuad.NoQuad
 }
 
 object KeyedQuad {
+  /** `sKind` of a placeholder row (no RDF term kind uses it). */
+  val NoQuad: Byte = -1
+
   def apply(key: String, q: Quad): KeyedQuad =
     KeyedQuad(key, q.sKind, q.s, q.p, q.oKind, q.o, q.oDt, q.oLang, q.gKind, q.g)
+
+  /** The row standing for a document with no quads. */
+  def placeholder(key: String): KeyedQuad =
+    KeyedQuad(key, NoQuad, "", "", NoQuad, "", "", "", NoQuad, "")
 }
 
 /** Column shape of one collected triple in
@@ -48,7 +59,7 @@ final case class CanonResult(
 /** Distributed RDFC-1.0: group quads by graph key, run the
   * single-graph kernel partition-parallel.
   *
-  * Why `groupByKey.flatMapGroups` and not a distributed formulation:
+  * Why one per-graph kernel call and not a distributed formulation:
   * HNDQ needs random access to the whole graph's mention sets and
   * threads issuer state sequentially through every step, so the graph
   * is the atomic unit of work; the parallelism axis is the number of
@@ -152,11 +163,28 @@ object CanonEngine {
     val limit = opts.hndqCallLimit
     val alg = opts.hashAlgorithm
     val perNode = opts.perNodeCounter
+    // one hash exchange on the graph key at the session's shuffle
+    // width (AQE would coalesce this small shuffle into one partition
+    // and run every graph's kernel in one task), sorted by key, then
+    // one streaming pass per graph
     quads
-      .groupByKey(_.key)
-      .flatMapGroups { (key: String, it: Iterator[KeyedQuad]) =>
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("key"))
+      .sortWithinPartitions("key")
+      .mapPartitions { rows =>
         val o = CanonOptions(limit, alg, perNode)
-        Iterator.single(canonicalizeOne(key, it.map(_.quad).toVector, o))
+        val it = rows.buffered
+        new Iterator[CanonResult] {
+          def hasNext: Boolean = it.hasNext
+          def next(): CanonResult = {
+            val key = it.head.key
+            val qs = Vector.newBuilder[Quad]
+            while (it.hasNext && it.head.key == key) {
+              val kq = it.next()
+              if (!kq.isPlaceholder) qs += kq.quad
+            }
+            canonicalizeOne(key, qs.result(), o)
+          }
+        }
       }
   }
 
@@ -178,7 +206,7 @@ object CanonEngine {
       triples: org.apache.spark.sql.DataFrame,
       opts: CanonOptions = CanonOptions.default
   ): Dataset[CanonResult] = {
-    import org.apache.spark.sql.functions.{col, collect_list, struct}
+    import org.apache.spark.sql.functions.{collect_list, struct}
     val spark = triples.sparkSession
     import spark.implicits._
     val limit = opts.hndqCallLimit
@@ -199,13 +227,15 @@ object CanonEngine {
       }
   }
 
-  /** Fixture-shaped source: parse an N-Quads document string per key.
+  /** Fixture-shaped source: parse an N-Quads document string per key;
+    * a document without quads yields one [[KeyedQuad.placeholder]].
     * (Reference parses via oxttl in its test runner, `src/lib.rs:116-119`.) */
   def parseDocuments(docs: Dataset[(String, String)]): Dataset[KeyedQuad] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.flatMap { case (key, text) =>
-      graft.rdf.NQuadsParser.parseDocument(text).map(q => KeyedQuad(key, q))
+      val qs = graft.rdf.NQuadsParser.parseDocument(text)
+      if (qs.isEmpty) Seq(KeyedQuad.placeholder(key)) else qs.map(q => KeyedQuad(key, q))
     }
   }
 

@@ -26,7 +26,7 @@ object NQuadsSink {
     val spark = quads.sparkSession
     import spark.implicits._
     quads
-      .map(kq => NQuadsWriter.quadBody(kq.quad) + " .")
+      .flatMap(kq => if (kq.isPlaceholder) None else Some(NQuadsWriter.quadBody(kq.quad) + " ."))
       .toDF("stmt")
       .withColumn("sortKey", encode(col("stmt"), "UTF-8"))
       .orderBy("sortKey")
@@ -52,7 +52,7 @@ object NQuadsSink {
     val spark = quads.sparkSession
     import spark.implicits._
     val relabeled = quads.groupByKey(_.key).flatMapGroups { (key, it) =>
-      val qs = it.map(_.quad).toVector
+      val qs = it.filterNot(_.isPlaceholder).map(_.quad).toVector
       val res = graft.canon.Rdfc10.issue(qs, graft.canon.CanonOptions(
         opts.hndqCallLimit, opts.hashAlgorithm))
       graft.canon.Rdfc10.relabel(res.dedupedQuads, res.issuedMap)

@@ -36,7 +36,11 @@ object QPlanFinal {
     // separate aggregate query); the listener captures the WRITE's
     // QueryExecution, whose executedPlan is the final adaptive plan
     df.write.format("noop").mode("overwrite").save()
-    Thread.sleep(1000)
+    // the listener bus delivers onSuccess asynchronously: poll for the
+    // captured plan instead of sleeping a fixed time
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    if (plans.isEmpty) System.err.println(s"QPlanFinal: no plan captured for $name within 30 s")
     plans.forEach(println)
     spark.stop()
   }

@@ -4,8 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Targeted per-query timing for A/B experiments: runs the named
   * SparkEntry queries for `trials` rounds against one sf dir and
-  * prints one line per (trial, query). Pair with JVM flags under
-  * test (e.g. `-Dgraft.ops.cache=false`) and interleave whole JVM
+  * prints one line per (trial, query). Interleave whole JVM
   * invocations A/B/A/B so host drift hits both arms equally.
   *
   *   QueryBench <sfDir> <q1,q2,...> [trials]
@@ -33,9 +32,7 @@ object QueryBench {
         val t0 = System.nanoTime()
         val rows = fn(spark, sfDir).count()
         val secs = (System.nanoTime() - t0) / 1e9
-        // label reads the EFFECTIVE flag through the one shared
-        // helper, so it cannot drift from LshUtil.maybePersist again
-        println(f"QB $n trial=$t $secs%.3f s rows=$rows cache=${graft.ops.LshUtil.cacheEnabled}")
+        println(f"QB $n trial=$t $secs%.3f s rows=$rows")
       }
     }
     spark.stop()

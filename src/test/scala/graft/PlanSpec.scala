@@ -58,7 +58,39 @@ class PlanSpec extends AnyFunSuite {
     val plan = planOf(graft.spark.CanonEngine.canonicalizePerGraph(quads).toDF())
     val exchanges = plan.linesIterator.count(_.contains("Exchange hashpartitioning"))
     assert(exchanges == 1, plan)
-    assert(plan.contains("MapGroups"), plan)
+    // the per-graph kernel streams the key-sorted partition
+    assert(plan.contains("MapPartitions graft.spark.CanonEngine"), plan)
+  }
+
+  test("near-dup calls run the shingle kernel once; q21 candidates need no window") {
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Walk extends AdaptiveSparkPlanHelper
+    // the shingle kernel is the MapPartitions whose stage reads the text
+    def readsText(p: SparkPlan): Boolean =
+      p.output.exists(_.name == "text") || p.children.exists(readsText)
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    Seq(
+      "q19" -> graft.ops.Dedup.minhashLshPairs(docs, threshold = 0.5),
+      "q21 prefix" -> graft.ops.Dedup.ngramJaccardPairs(docs, threshold = 0.5, prefixMinDocs = 0),
+      "q21 full" -> graft.ops.Dedup.ngramJaccardPairs(docs, threshold = 0.5,
+        prefixMinDocs = Int.MaxValue)
+    ).foreach { case (name, df) =>
+      df.collect() // AQE settles the final plan (and stage reuse) on execution
+      val p = df.queryExecution.executedPlan
+      assert(p.toString.contains("isFinalPlan=true"), p)
+      val kernels = Walk.collectWithSubqueries(p) {
+        case m: MapPartitionsExec if readsText(m) => m
+      }
+      assert(kernels.size == 1, s"$name runs the shingle kernel ${kernels.size} times: $p")
+      if (name.startsWith("q21")) {
+        val windows = Walk.collectWithSubqueries(p) {
+          case w if w.nodeName.contains("Window") => w
+        }
+        assert(windows.isEmpty, s"$name: $p")
+        assert(!p.toString.contains("collect_list"), s"$name: $p")
+      }
+    }
   }
 
   test("whole-stage codegen covers the scan-side of aggregation queries") {

@@ -187,6 +187,63 @@ class OpsSpec extends AnyFunSuite {
     assert(stats.getAs[Long]("n_docs_unindexed") == 150L)
   }
 
+  test("candidate kernel: groups of cap-1, cap and cap+1 ids follow the brute-force rules") {
+    // the rules stated directly: a group of at most `cap` ids yields all
+    // of its admitted pairs; a larger group yields its min id paired
+    // with the next `starSpan` ids, unchecked
+    def rule(ids: Seq[Long], cap: Int, starSpan: Int,
+             admit: (Long, Long) => Boolean): Set[(Long, Long)] =
+      if (ids.size <= cap) (for (a <- ids; b <- ids if a < b && admit(a, b)) yield (a, b)).toSet
+      else ids.tail.take(starSpan).map(ids.head -> _).toSet
+    val rnd = new scala.util.Random(11)
+    val cap = 5
+    val sizes = Seq(1, cap - 1, cap, cap + 1, 3 * cap, cap - 1)
+    val groups = sizes.zipWithIndex.map { case (g, key) =>
+      key.toLong -> rnd.shuffle((0L until 1000L).toVector).take(g).sorted
+    }
+    val rows = groups.flatMap { case (k, ids) => ids.map(k -> _) }
+    val admits: Seq[(Long, Long) => Boolean] = Seq((_, _) => true, (a, b) => (a + b) % 3 != 0)
+    for (starSpan <- Seq(cap, Int.MaxValue); admit <- admits) {
+      val got = LshUtil.groupPairs(rows.iterator, cap, starSpan)(
+          _._1 == _._1, (x, y) => admit(x._2, y._2))
+        .map { case (a, b) =>
+          assert(a._1 == b._1, s"pair across groups: $a $b")
+          (a._1, a._2, b._2)
+        }.toVector
+      val expect = groups.flatMap { case (k, ids) =>
+        rule(ids, cap, starSpan, admit).map { case (a, b) => (k, a, b) }
+      }
+      assert(got.size == got.toSet.size, s"repeated pairs: $got")
+      assert(got.toSet == expect.toSet, s"starSpan=$starSpan")
+    }
+  }
+
+  test("hot-group cutoff at cap-1, cap and cap+1 identical docs (q21 maxDf, q19 maxBucket)") {
+    // identical docs: every shingle has df = g and every LSH bucket
+    // holds all g docs, so the emitted pairs (all at jaccard 1.0) are
+    // exactly the candidate rule of one group
+    val text = "identical text long enough to give many distinct shingles"
+    val cap = 5
+    Seq(cap - 1, cap, cap + 1, cap + 3).foreach { g =>
+      val ids = (0 until g).map(i => 7L + 3 * i)
+      val d = docs(ids.map(_ -> text): _*)
+      val all = (for (a <- ids; b <- ids if a < b) yield (a, b)).toSet
+      // q21: past maxDf, the min id with the next maxDf ids
+      val q21Rule = if (g <= cap) all else ids.tail.take(cap).map(ids.head -> _).toSet
+      // q19: past maxBucket, the min id with every member
+      val q19Rule = if (g <= cap) all else ids.tail.map(ids.head -> _).toSet
+      Seq(0, Int.MaxValue).foreach { minDocs =>
+        val got = Dedup.ngramJaccardPairs(d, threshold = 0.5, maxDf = cap,
+            prefixMinDocs = minDocs)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(got == q21Rule, s"q21 g=$g prefixMinDocs=$minDocs: $got")
+      }
+      val got19 = Dedup.minhashLshPairs(d, threshold = 0.5, maxBucket = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got19 == q19Rule, s"q19 g=$g: $got19")
+    }
+  }
+
   test("PROPERTY: adaptive plans emit identical sets when maxDf BINDS") {
     // the round-4 defect: maxDf applied to prefix-df on one plan and
     // full-df on the other made the plans emit different sets once the

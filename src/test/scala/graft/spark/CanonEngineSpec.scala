@@ -66,4 +66,35 @@ class CanonEngineSpec extends AnyFunSuite {
     assert(r.outputSha256 == CanonEngine.sha256Hex(r.canonicalNQuads))
     assert(r.hndqCalls >= 0)
   }
+
+  test("an empty document keeps its row: test001 through the spark path") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val docs = spark.createDataset(Seq(("t1", fixture("test001-in.nq"))))
+    val res = CanonEngine.canonicalizePerGraph(CanonEngine.parseDocuments(docs)).collect()
+    assert(res.length == 1, res.toSeq)
+    val r = res.head
+    assert(r.key == "t1" && r.status == "ok", r)
+    assert(r.canonicalNQuads == fixture("test001-rdfc10.nq"))
+    assert(r.canonicalNQuads == graft.canon.Rdfc10.canonicalize(Seq.empty))
+    assert(r.quadCount == 0 && r.bnodeCount == 0 && r.issuedMapJson == "{}", r)
+    assert(r.outputSha256 == CanonEngine.sha256Hex(""))
+  }
+
+  test("one empty document among several: every key gets its row") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val docs = spark.createDataset(Seq(
+      ("a", fixture("test020-in.nq")), ("empty", ""), ("b", fixture("test044-in.nq"))))
+    val res = CanonEngine.canonicalizePerGraph(CanonEngine.parseDocuments(docs))
+      .collect().map(r => r.key -> r).toMap
+    assert(res.keySet == Set("a", "empty", "b"))
+    assert(res("empty").status == "ok" && res("empty").canonicalNQuads.isEmpty)
+    assert(res("empty").outputSha256 == CanonEngine.sha256Hex(""))
+    assert(res("a").canonicalNQuads == fixture("test020-rdfc10.nq"))
+    assert(res("b").canonicalNQuads == fixture("test044-rdfc10.nq"))
+    // the placeholder row of the empty document is not a statement
+    assert(NQuadsSink.collectDocument(CanonEngine.parseDocuments(
+      spark.createDataset(Seq(("empty", ""))))) == "")
+  }
 }

@@ -19,7 +19,8 @@ final class HndqCallLimitExceededException(val limit: Int)
 /** Options (reference `CanonicalizationOptions`, `src/api.rs:137-140`,
   * default call limit `src/counter.rs:4`; hash dispatch `src/lib.rs:87-102`).
   * `perNodeCounter` selects the reference's `PerNodeHndqCallCounter`
-  * (`src/counter.rs:58-114`) instead of the global budget. */
+  * (`src/counter.rs:58-114`) instead of the global budget. A case
+  * class, so serializable: Spark closures capture it whole. */
 final case class CanonOptions(
     hndqCallLimit: Int = CanonOptions.DefaultHndqCallLimit,
     hashAlgorithm: String = "SHA-256",
@@ -84,7 +85,8 @@ final class IdentifierIssuer(val prefix: String) {
   *
   * Spark-first layering: this object is pure single-graph Scala with
   * zero Spark dependencies; the distributed engine invokes it once
-  * per graph inside `groupByKey(_.graph).flatMapGroups` because
+  * per graph from one streaming pass over key-sorted rows
+  * (`graft.spark.CanonEngine.perGraph`) because
   * blank-node state is graph-local and the algorithm is inherently
   * sequential per graph (issuer state threads through every step).
   * Semantics follow the reference kernel `canonicalize_core`

@@ -1,5 +1,8 @@
 package graft.pipeline
 
+import graft.canon.CanonOptions
+import graft.rdf.{Quad, TermKind}
+import graft.spark.{CanonEngine, CanonResult}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -17,7 +20,8 @@ final case class AliasEdge(src: String, dst: String)
 /** KG-construction operators around the canonicalization kernel
   * (SURVEY §2b). All DataFrame/Dataset-first; the only custom code
   * paths are `mapPartitions` for batched regex scanning (per the
-  * north rule) and the per-graph canonicalization kernel.
+  * north rule) and the per-graph canonicalization kernel with its
+  * fused path's dictionary-id lookup.
   */
 object Kg {
 
@@ -317,55 +321,55 @@ object Kg {
   /** Triple dedup. `dropDuplicates` hash-partitions on the FULL key
     * (all six columns) with map-side partial deduplication, so a
     * mega-repo cannot skew this shuffle — every row is its own group.
-    * (No extra salted repartition: that would add a second full
-    * shuffle for keys that are already uniformly distributed. The
-    * skew that CAN hurt is the downstream per-repo groupByKey into
-    * the canonicalization kernel, which is unsalvageable by salting —
-    * the graph must co-locate — and is instead bounded by the HNDQ
-    * budget + surfaced via per-graph quadCount/hndqCalls metrics.)
+    * Behind [[emitTriples]] it adds no exchange (its `repo`
+    * partitioning already clusters the full key). The skew that CAN
+    * hurt is the per-repo run into the canonicalization kernel, which
+    * no salting can spread — the graph must co-locate — and is instead
+    * bounded by the HNDQ budget and surfaced via the per-graph
+    * quadCount/hndqCalls metrics.
     */
   def dedupTriples(triples: DataFrame): DataFrame =
     triples.dropDuplicates("repo", "subjKind", "subj", "pred", "obj", "objKind")
 
-  /** FUSED fast path: linked mentions → canonical graphs with ONE
-    * wide dependency. Groups mentions by repo (the same exchange the
-    * kernel needs anyway), then per task: order mentions per file,
-    * emit triples, dedup in-memory, run RDFC-1.0. Compared to the
-    * staged emitTriples → dedupTriples → canonicalizeTriples chain
-    * this removes two full shuffles of the (duplicate-heavy) triple
-    * set — at 100 TB that is the difference between one corpus-wide
-    * exchange and three. The staged path remains for pipelines that
-    * materialize the triple table (metrics / downstream consumers).
-    */
   /** Hard bound on the entity→canonical dictionary the fused path may
     * collect/broadcast (rows). The dictionary is broadcast-sized BY
-    * DESIGN (the link join already ships it whole to every executor),
-    * but the bound used to be implicit; past it the fused path now
-    * fails fast with a pointer to the staged chain instead of
-    * attempting an unbounded driver collect. */
+    * DESIGN (the link join already ships it whole to every executor);
+    * past the bound the fused path fails fast with a pointer to the
+    * staged chain instead of attempting an unbounded driver collect. */
   val MaxFusedDictRows: Int = 5000000
 
+  /** FUSED fast path: linked mentions → canonical graphs with ONE
+    * wide dependency. The mentions take the per-graph spine
+    * ([[graft.spark.CanonEngine.perGraph]]) sorted by
+    * (repo, path, offset, cid); each repo's run emits its triples in
+    * one streaming pass per file, dedups them in-memory and runs
+    * RDFC-1.0. Compared to the staged emitTriples → dedupTriples →
+    * canonicalizeTriples chain this never materializes the
+    * (duplicate-heavy) triple set. The staged path remains for
+    * pipelines that materialize the triple table (metrics / downstream
+    * consumers). Result rows equal the staged chain's byte for byte.
+    */
   def canonicalizeFromMentions(linked: Dataset[LinkedMention], canonMap: DataFrame,
-                               opts: graft.canon.CanonOptions = graft.canon.CanonOptions.default,
+                               opts: CanonOptions = CanonOptions.default,
                                maxDictRows: Int = MaxFusedDictRows)
-      : Dataset[graft.spark.CanonResult] = {
+      : Dataset[CanonResult] = {
     val spark = linked.sparkSession
     import spark.implicits._
-    import graft.rdf.TermKind
     // The canonical-entity dictionary is broadcast-sized BY DESIGN
-    // (canonMap already ships whole to every executor for this join),
+    // (canonMap already ships whole to every executor for the link join),
     // so the corpus-wide exchange carries a 4-byte dictionary id per
-    // mention instead of the canonical-name string, and mapGroups
-    // decodes ids through ONE broadcast array — the shuffle shrinks
-    // and every decoded name is a SHARED instance (row machinery, not
-    // the kernel, dominates this stage: one less string allocation
-    // per shuffled row). Ordering: ids index a dictionary sorted in
-    // CODE-POINT order — the same order Spark's UTF8String binary
-    // comparison gives the staged path's sort_array — so (offset, id)
-    // ties break identically to the staged (offset, name) sort even
-    // for astral-plane names (Java string order would diverge there;
-    // a mention CAN carry several same-offset candidates whenever two
-    // dictionary entries clear the link-score threshold).
+    // mention instead of the canonical-name string, and the kernel
+    // side decodes ids through ONE broadcast array — the shuffle
+    // shrinks and every decoded name is a SHARED instance (row
+    // machinery, not the kernel, dominates this stage: one less string
+    // allocation per shuffled row). Ordering: ids index a dictionary
+    // sorted in CODE-POINT order — the same order Spark's UTF8String
+    // binary comparison gives the staged path's window sort — so
+    // (offset, id) ties break identically to the staged (offset, name)
+    // sort even for astral-plane names (Java string order would
+    // diverge there; a mention CAN carry several same-offset
+    // candidates whenever two dictionary entries clear the link-score
+    // threshold).
     // the collect is gated by an early-stopping limit probe (the
     // probe IS the data when it passes — one pass, driver memory
     // bounded at maxDictRows + 1 rows even on a pathological input)
@@ -382,58 +386,67 @@ object Kg {
     val canonIdx: Array[String] =
       canonPairs.map(_._2).distinct.sorted(graft.rdf.CodePointOrdering)
     val idOf = canonIdx.zipWithIndex.toMap
-    val entToId = canonPairs.map { case (e, c) => (e, idOf(c)) }.toSeq
-      .toDF("ent_key", "cid")
+    // a broadcast map lookup, not a broadcast hash join: with the join,
+    // peak live heap on the kg_fused benchmark (1,000 repos, 4 threads)
+    // was about 95 MB higher
+    val bcCid = spark.sparkContext.broadcast(
+      canonPairs.map { case (e, c) => e -> idOf(c) }.toMap)
+    val cidOf = udf((e: String) => bcCid.value.getOrElse(e, -1))
     val m = linked.toDF()
-      .join(broadcast(entToId), col("entity") === col("ent_key"))
-      .select(col("repo"), col("path"), col("cid"), col("offset"))
+      .select(col("repo"), col("path"), cidOf(col("entity")).as("cid"), col("offset"))
+      .where(col("cid") >= 0) // mentions of entities outside canonMap drop
       .as[(String, String, Int, Long)]
     val bcIdx = spark.sparkContext.broadcast(canonIdx)
-    val limit = opts.hndqCallLimit
-    val alg = opts.hashAlgorithm
-    val perNode = opts.perNodeCounter
-    m.groupByKey(_._1).mapGroups { (repo, it) =>
+    CanonEngine.perGraph(m, "repo", "path", "offset", "cid")(_._1) { (repo, run) =>
       val idx = bcIdx.value
-      val perFile = new scala.collection.mutable.HashMap[String, mutable.ArrayBuffer[(Long, Int)]]
-      it.foreach { case (_, path, cid, off) =>
-        perFile.getOrElseUpdate(path, new mutable.ArrayBuffer) += ((off, cid))
-      }
-      val seen = new scala.collection.mutable.HashSet[(Byte, String, String, String, Byte)]
-      val quads = new mutable.ArrayBuffer[graft.rdf.Quad]
+      val seen = new mutable.HashSet[(Byte, String, String, String, Byte)]
+      val quads = new mutable.ArrayBuffer[Quad]
       def add(sk: Byte, s: String, p: String, o: String, ok: Byte): Unit =
         if (seen.add((sk, s, p, o, ok)))
-          quads += graft.rdf.Quad(sk, s, p, ok, o, "", "", TermKind.DefaultGraph, "")
-      perFile.toSeq.sortBy(_._1).foreach { case (path, ms) =>
-        val fileIri = s"urn:src:$repo/$path"
-        add(TermKind.Iri, s"urn:repo:$repo", "urn:p:hasFile", fileIri, TermKind.Iri)
-        var prevId = -1
-        ms.sortInPlace() // (offset, cid) == (offset, name) order: idx is sorted
-        ms.foreach { case (_, cid) =>
-          val ent = idx(cid)
-          add(TermKind.BNode, ent, "urn:p:type", "urn:c:Entity", TermKind.Iri)
-          add(TermKind.BNode, ent, "urn:p:mentionedIn", fileIri, TermKind.Iri)
-          add(TermKind.BNode, ent, "urn:p:label", ent, TermKind.Literal)
-          if (prevId >= 0 && prevId != cid)
-            add(TermKind.BNode, idx(prevId), "urn:p:coOccursWith", ent, TermKind.BNode)
-          prevId = cid
+          quads += Quad(sk, s, p, ok, o, "", "", TermKind.DefaultGraph, "")
+      var path: String = null
+      var fileIri: String = null
+      var prevId = -1
+      run.foreach { case (_, p, cid, _) =>
+        if (fileIri == null || p != path) { // a file's first mention
+          path = p
+          fileIri = s"urn:src:$repo/$p"
+          add(TermKind.Iri, s"urn:repo:$repo", "urn:p:hasFile", fileIri, TermKind.Iri)
+          prevId = -1
         }
+        val ent = idx(cid)
+        add(TermKind.BNode, ent, "urn:p:type", "urn:c:Entity", TermKind.Iri)
+        add(TermKind.BNode, ent, "urn:p:mentionedIn", fileIri, TermKind.Iri)
+        add(TermKind.BNode, ent, "urn:p:label", ent, TermKind.Literal)
+        if (prevId >= 0 && prevId != cid)
+          add(TermKind.BNode, idx(prevId), "urn:p:coOccursWith", ent, TermKind.BNode)
+        prevId = cid
       }
       // `seen` already enforced set semantics — skip the kernel's dedup
-      graft.spark.CanonEngine.canonicalizeOne(repo, quads.toVector,
-        graft.canon.CanonOptions(limit, alg, perNode), assumeDistinct = true)
+      Iterator.single(CanonEngine.canonicalizeOne(repo, quads.toVector, opts,
+        assumeDistinct = true))
     }
   }
 
-  /** Triples → per-repo canonical N-Quads via the RDFC-1.0 engine.
-    * Stays relational into the per-repo grouping
-    * ([[graft.spark.CanonEngine.canonicalizeTripleRows]]), so when the
-    * input is already hash-partitioned on `repo` — as
-    * [[emitTriples]]/[[dedupTriples]] output is — the grouping adds NO
-    * exchange; plain literals carry dt="" (implicit xsd:string;
-    * canonical N-Quads suppresses it and Quad equality uses ""). */
+  /** Triples → per-repo canonical N-Quads via the RDFC-1.0 engine: the
+    * [[TripleRow]]s take the per-graph spine keyed on `repo`, whose
+    * exchange the planner drops when the input is already
+    * hash-partitioned on `repo` at the session width — as
+    * [[emitTriples]]/[[dedupTriples]] output is — so the staged chain
+    * keeps its one exchange. Plain literals carry dt="" (implicit
+    * xsd:string; canonical N-Quads suppresses it and Quad equality
+    * uses ""). */
   def canonicalizeTriples(triples: DataFrame,
-                          opts: graft.canon.CanonOptions = graft.canon.CanonOptions.default)
-      : Dataset[graft.spark.CanonResult] =
-    graft.spark.CanonEngine.canonicalizeTripleRows(
-      triples.select("repo", "subjKind", "subj", "pred", "obj", "objKind"), opts)
+                          opts: CanonOptions = CanonOptions.default)
+      : Dataset[CanonResult] = {
+    val spark = triples.sparkSession
+    import spark.implicits._
+    val rows = triples.select("repo", "subjKind", "subj", "pred", "obj", "objKind")
+      .as[TripleRow]
+    CanonEngine.perGraph(rows, "repo")(_.repo) { (repo, run) =>
+      Iterator.single(CanonEngine.canonicalizeOne(repo, run.map(t =>
+        Quad(t.subjKind, t.subj, t.pred, t.objKind, t.obj, "", "",
+          TermKind.DefaultGraph, "")).toVector, opts))
+    }
+  }
 }

@@ -26,8 +26,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *  - corpus scan is a plain columnar scan: filters/pruning reach
   *    parquet; stages select only needed columns before wide ops.
   *  - dictionary joins are broadcast; the only big shuffles are the
-  *    triple dedup (salted — Kg.dedupTriples) and the per-repo
-  *    groupByKey feeding the kernel (unavoidable: graph-local state).
+  *    hash exchange on repo in Kg.emitTriples (the triple dedup reuses
+  *    it) and the per-repo exchange into the kernel
+  *    (CanonEngine.perGraph; unavoidable: graph-local state).
   *  - CC runs on the tiny alias-edge set, localCheckpoint per
   *    iteration truncates lineage.
   *  - all stage outputs are Parquet → resume cost is O(changed

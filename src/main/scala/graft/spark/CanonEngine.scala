@@ -1,8 +1,8 @@
 package graft.spark
 
-import graft.canon.{CanonOptions, HndqCallLimitExceededException, Rdfc10}
+import graft.canon.{CanonException, CanonOptions, HndqCallLimitExceededException, Rdfc10}
 import graft.rdf.Quad
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** One quad tagged with the graph (partition) key it belongs to.
@@ -34,12 +34,6 @@ object KeyedQuad {
     KeyedQuad(key, NoQuad, "", "", NoQuad, "", "", "", NoQuad, "")
 }
 
-/** Column shape of one collected triple in
-  * [[CanonEngine.canonicalizeTripleRows]] (field names must match the
-  * struct() the aggregate builds). */
-final case class TripleCols(subjKind: Byte, subj: String, pred: String,
-                            obj: String, objKind: Byte)
-
 /** Per-graph canonicalization outcome. `status` is "ok" or an error
   * class name; a poisoned graph yields an error ROW, never a failed
   * job (mirrors the reference's negative test #test074c semantics:
@@ -56,23 +50,27 @@ final case class CanonResult(
     outputSha256: String
 )
 
-/** Distributed RDFC-1.0: group quads by graph key, run the
+/** Distributed RDFC-1.0: bring each graph's rows together, run the
   * single-graph kernel partition-parallel.
   *
   * Why one per-graph kernel call and not a distributed formulation:
   * HNDQ needs random access to the whole graph's mention sets and
   * threads issuer state sequentially through every step, so the graph
   * is the atomic unit of work; the parallelism axis is the number of
-  * graphs. The one shuffle here (hash exchange on `key`) is
-  * unavoidable and minimal: `select` down to exactly the quad columns
-  * BEFORE calling this (DeserializeToObject above the exchange blocks
-  * column pruning — SURVEY §4.2).
+  * graphs. Every path into the kernel (the keyed-quad, staged-triple,
+  * fused-mention and statement paths) goes through [[perGraph]]: one
+  * hash exchange on the key (skipped by the planner when the input is
+  * already hash-partitioned on it at the same width), a sort within
+  * partitions, and one callback per run of equal keys. `select` down
+  * to the needed columns BEFORE calling in (DeserializeToObject above
+  * the exchange blocks column pruning — SURVEY §4.2).
   *
-  * Scale notes (100 TB): skew from mega-graphs is bounded by (a) the
-  * HNDQ call budget making per-graph cost near-linear in quads for
-  * non-adversarial graphs, and (b) AQE splitting oversized shuffle
-  * partitions; per-graph metrics (quadCount, hndqCalls) land in the
-  * output so stragglers are observable.
+  * Scale notes (100 TB): skew from mega-graphs is bounded only by the
+  * HNDQ call budget, which keeps per-graph cost near-linear in quads
+  * for non-adversarial graphs; AQE does not split the pinned-width
+  * exchange, so one mega-graph stays one task. Per-graph metrics
+  * (quadCount, hndqCalls) land in the output so stragglers are
+  * observable.
   */
 object CanonEngine {
 
@@ -101,7 +99,9 @@ object CanonEngine {
     new String(out)
   }
 
-  private def mapToJson(m: Map[String, String]): String =
+  /** The issued-identifiers map as a JSON object, keys sorted — the
+    * `issuedMapJson` of a [[CanonResult]] and the `rdfc10_issue` value. */
+  def issuedMapJson(m: Map[String, String]): String =
     m.toSeq.sortBy(_._1).map { case (k, v) =>
       "\"" + escape(k) + "\":\"" + escape(v) + "\""
     }.mkString("{", ",", "}")
@@ -133,6 +133,13 @@ object CanonEngine {
     sb.toString
   }
 
+  /** The `status` of a graph the kernel rejected, e.g.
+    * `HndqCallLimitExceeded(4000)`; shared with `rdfc10_status`. */
+  def statusOf(e: CanonException): String = e match {
+    case h: HndqCallLimitExceededException => s"HndqCallLimitExceeded(${h.limit})"
+    case _ => e.getClass.getSimpleName
+  }
+
   /** Canonicalize one graph's quads (driver-side / in-task helper).
     * `assumeDistinct` skips the set-semantics dedup for callers that
     * already guarantee it (the fused pipeline's in-kernel set). */
@@ -143,88 +150,49 @@ object CanonEngine {
       val res = Rdfc10.issue(quads, opts,
         graft.canon.NoopTraceLogger, assumeDistinct)
       val doc = Rdfc10.canonicalDocument(res) // fused relabel+serialize
-      CanonResult(key, doc, mapToJson(res.issuedMap), "ok", res.hndqCalls,
+      CanonResult(key, doc, issuedMapJson(res.issuedMap), "ok", res.hndqCalls,
         res.dedupedQuads.size, res.issuedMap.size, sha256Hex(doc))
     } catch {
-      case e: HndqCallLimitExceededException =>
-        CanonResult(key, "", "{}", s"HndqCallLimitExceeded(${e.limit})", -1,
-          quads.size, -1, "")
-      case e: graft.canon.CanonException =>
-        CanonResult(key, "", "{}", e.getClass.getSimpleName, -1, quads.size, -1, "")
+      case e: CanonException =>
+        CanonResult(key, "", "{}", statusOf(e), -1, quads.size, -1, "")
     }
 
-  /** The distributed operator. */
+  /** The per-graph spine: hash-partition `rows` on the string column
+    * `key` at `spark.sql.shuffle.partitions` (AQE would coalesce a
+    * small shuffle into one partition and run every graph in one
+    * task), sort each partition by `key` then `orderBy`, and call `f`
+    * once per run of rows with equal `keyOf`. `f` must read what it
+    * needs of the run before it returns; the spine drains the rest. */
+  def perGraph[T, R: Encoder](rows: Dataset[T], key: String, orderBy: String*)(
+      keyOf: T => String)(f: (String, Iterator[T]) => IterableOnce[R]): Dataset[R] =
+    rows
+      .repartition(rows.sparkSession.sessionState.conf.numShufflePartitions, col(key))
+      .sortWithinPartitions((key +: orderBy).map(col): _*)
+      .mapPartitions { it =>
+        val in = it.buffered
+        Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+          val k = keyOf(in.head)
+          val run = new Iterator[T] {
+            def hasNext: Boolean = in.hasNext && keyOf(in.head) == k
+            def next(): T = in.next()
+          }
+          val out = f(k, run)
+          run.foreach(_ => ())
+          out
+        }
+      }
+
+  /** The distributed operator over keyed quads. */
   def canonicalizePerGraph(
       quads: Dataset[KeyedQuad],
       opts: CanonOptions = CanonOptions.default
   ): Dataset[CanonResult] = {
     val spark = quads.sparkSession
     import spark.implicits._
-    val limit = opts.hndqCallLimit
-    val alg = opts.hashAlgorithm
-    val perNode = opts.perNodeCounter
-    // one hash exchange on the graph key at the session's shuffle
-    // width (AQE would coalesce this small shuffle into one partition
-    // and run every graph's kernel in one task), sorted by key, then
-    // one streaming pass per graph
-    quads
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("key"))
-      .sortWithinPartitions("key")
-      .mapPartitions { rows =>
-        val o = CanonOptions(limit, alg, perNode)
-        val it = rows.buffered
-        new Iterator[CanonResult] {
-          def hasNext: Boolean = it.hasNext
-          def next(): CanonResult = {
-            val key = it.head.key
-            val qs = Vector.newBuilder[Quad]
-            while (it.hasNext && it.head.key == key) {
-              val kq = it.next()
-              if (!kq.isPlaceholder) qs += kq.quad
-            }
-            canonicalizeOne(key, qs.result(), o)
-          }
-        }
-      }
-  }
-
-  /** Triple-table variant of [[canonicalizePerGraph]] for the staged
-    * KG pipeline: input is a DataFrame of
-    * (repo, subjKind, subj, pred, obj, objKind) rows (plain literals,
-    * default graph — the `Kg.emitTriples` shape). Grouping runs as a
-    * RELATIONAL `groupBy(repo).agg(collect_list(struct(...)))` + typed
-    * map instead of `groupByKey.flatMapGroups`: a relational aggregate
-    * declares ClusteredDistribution(repo), which an upstream exchange
-    * already hash-partitioned on `repo` (emitTriples) SATISFIES — so
-    * the staged chain canonicalizes with zero additional shuffles,
-    * where the typed groupByKey always re-exchanged the full triple
-    * set. Result rows are identical to
-    * `canonicalizePerGraph(keyed quads)`: the kernel is insensitive to
-    * quad arrival order (pinned by the staged/fused equality tests).
-    */
-  def canonicalizeTripleRows(
-      triples: org.apache.spark.sql.DataFrame,
-      opts: CanonOptions = CanonOptions.default
-  ): Dataset[CanonResult] = {
-    import org.apache.spark.sql.functions.{collect_list, struct}
-    val spark = triples.sparkSession
-    import spark.implicits._
-    val limit = opts.hndqCallLimit
-    val alg = opts.hashAlgorithm
-    val perNode = opts.perNodeCounter
-    triples
-      .groupBy(col("repo"))
-      .agg(collect_list(struct(col("subjKind"), col("subj"), col("pred"),
-        col("obj"), col("objKind"))).as("qs"))
-      .as[(String, Seq[TripleCols])]
-      .mapPartitions { it =>
-        val o = CanonOptions(limit, alg, perNode)
-        it.map { case (key, qs) =>
-          canonicalizeOne(key, qs.map(t =>
-            Quad(t.subjKind, t.subj, t.pred, t.objKind, t.obj, "", "",
-              graft.rdf.TermKind.DefaultGraph, "")), o)
-        }
-      }
+    perGraph(quads, "key")(_.key) { (key, run) =>
+      Iterator.single(canonicalizeOne(key,
+        run.filterNot(_.isPlaceholder).map(_.quad).toVector, opts))
+    }
   }
 
   /** Fixture-shaped source: parse an N-Quads document string per key;

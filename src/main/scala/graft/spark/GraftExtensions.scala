@@ -106,9 +106,7 @@ case class Rdfc10Issue(child: Expression,
   override protected def nullSafeEval(input: Any): Any =
     try {
       val quads = NQuadsParser.parseDocument(input.asInstanceOf[UTF8String].toString)
-      val m = Rdfc10.issue(quads, options).issuedMap
-      UTF8String.fromString(
-        m.toSeq.sorted.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}"))
+      UTF8String.fromString(CanonEngine.issuedMapJson(Rdfc10.issue(quads, options).issuedMap))
     } catch {
       case _: CanonException | _: NQuadsParser.ParseException => null
     }
@@ -138,11 +136,7 @@ case class Rdfc10Status(child: Expression,
       try {
         val quads = NQuadsParser.parseDocument(input.asInstanceOf[UTF8String].toString)
         try { Rdfc10.issue(quads, options); "ok" }
-        catch {
-          case e: graft.canon.HndqCallLimitExceededException =>
-            s"HndqCallLimitExceeded(${e.limit})"
-          case e: CanonException => e.getClass.getSimpleName
-        }
+        catch { case e: CanonException => CanonEngine.statusOf(e) }
       } catch {
         case e: NQuadsParser.ParseException => s"parse_error: ${e.getMessage}"
       }

@@ -1,6 +1,7 @@
 package graft.spark
 
-import graft.rdf.{NQuadsWriter, Quad}
+import graft.canon.{CanonOptions, Rdfc10}
+import graft.rdf.NQuadsWriter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset}
 
@@ -47,17 +48,13 @@ object NQuadsSink {
     * document across graphs should relabel keys into the graph
     * position first — this helper keeps each graph's own term). */
   def canonicalStatements(quads: Dataset[KeyedQuad],
-                          opts: graft.canon.CanonOptions = graft.canon.CanonOptions.default)
+                          opts: CanonOptions = CanonOptions.default)
       : DataFrame = {
     val spark = quads.sparkSession
     import spark.implicits._
-    val relabeled = quads.groupByKey(_.key).flatMapGroups { (key, it) =>
-      val qs = it.filterNot(_.isPlaceholder).map(_.quad).toVector
-      val res = graft.canon.Rdfc10.issue(qs, graft.canon.CanonOptions(
-        opts.hndqCallLimit, opts.hashAlgorithm))
-      graft.canon.Rdfc10.relabel(res.dedupedQuads, res.issuedMap)
-        .iterator.map(q => KeyedQuad(key, q))
-    }
-    statements(relabeled)
+    statements(CanonEngine.perGraph(quads, "key")(_.key) { (key, run) =>
+      val res = Rdfc10.issue(run.filterNot(_.isPlaceholder).map(_.quad).toVector, opts)
+      Rdfc10.relabel(res.dedupedQuads, res.issuedMap).iterator.map(q => KeyedQuad(key, q))
+    })
   }
 }

@@ -15,8 +15,8 @@ import java.nio.file.{Files, Paths}
   * Reads an N-Quads document, canonicalizes it (RDFC-1.0), prints the
   * canonical N-Quads document to stdout (or the issued-identifiers
   * map JSON with --map). With --spark the dataset is routed through
-  * the distributed per-graph operator (groupByKey + flatMapGroups on
-  * a local session) instead of the in-process kernel — same bytes.
+  * the distributed per-graph operator (`CanonEngine.canonicalizePerGraph`
+  * on a local session) instead of the in-process kernel — same bytes.
   */
 object CanonCli {
   /** Canonical N-Quads are UTF-8 by definition — write raw UTF-8

@@ -62,6 +62,41 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("MapPartitions graft.spark.CanonEngine"), plan)
   }
 
+  test("the staged KG chain plans exactly one hash exchange") {
+    // emitTriples' exchange on repo serves the dedup and the per-graph
+    // spine of canonicalizeTriples (q27 is that chain)
+    val plan = planOf(SparkEntry.queries("q27_kg_canon")(spark, sf))
+    val exchanges = plan.linesIterator.count(_.contains("Exchange hashpartitioning"))
+    assert(exchanges == 1, plan)
+    assert(plan.contains("MapPartitions graft.spark.CanonEngine"), plan)
+  }
+
+  test("the fused KG path plans one hash exchange at the session width, no MapGroups") {
+    import graft.pipeline.{Corpus, Kg}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import spark.implicits._
+    object Walk extends AdaptiveSparkPlanHelper
+    val cfg = Corpus.Config(nRepos = 8, baseFilesPerRepo = 6)
+    val dictNames = (0 until cfg.nEntities).map(Corpus.entityName)
+    val files = Corpus.generate(spark, cfg)
+    val linked = Kg.linkMentions(
+      Kg.detectMentions(files, spark.sparkContext.broadcast(dictNames.toSet)),
+      dictNames.toDF("name"))
+    val cc = Kg.connectedComponents(dictNames.toDF("name"), Kg.detectAliases(files))
+    val p = Kg.canonicalizeFromMentions(linked, cc).toDF().queryExecution.executedPlan
+    val widths = Walk.collect(p) {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case h: HashPartitioning => h.numPartitions
+        case other => fail(s"unexpected exchange $other: $p")
+      }
+    }
+    assert(widths == Seq(spark.sessionState.conf.numShufflePartitions), p)
+    assert(p.toString.contains("MapPartitions graft.spark.CanonEngine"), p)
+    assert(!p.toString.contains("MapGroups"), p)
+  }
+
   test("near-dup calls run the shingle kernel once; q21 candidates need no window") {
     import org.apache.spark.sql.execution.MapPartitionsExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper

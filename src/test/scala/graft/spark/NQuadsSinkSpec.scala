@@ -36,6 +36,19 @@ class NQuadsSinkSpec extends AnyFunSuite {
     assert(distributed == fixture("test044-rdfc10.nq"))
   }
 
+  test("canonicalStatements honours the per-node HNDQ budget (test054)") {
+    // test054 makes 14 HNDQ calls in all but at most one per node: a
+    // per-node budget of 1 canonicalizes it (CounterSpec), a global
+    // budget of 1 does not
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val docs = spark.createDataset(Seq(("g", fixture("test054-in.nq"))))
+    val opts = graft.canon.CanonOptions(1, "SHA-256", perNodeCounter = true)
+    val distributed = NQuadsSink.canonicalStatements(CanonEngine.parseDocuments(docs), opts)
+      .collect().map(_.getString(0)).mkString("", "\n", "\n")
+    assert(distributed == fixture("test054-rdfc10.nq"))
+  }
+
   test("code-point order survives the UTF-16 trap (U+FFFD vs astral)") {
     val spark = SparkTestBase.spark
     import spark.implicits._

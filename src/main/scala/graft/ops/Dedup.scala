@@ -25,6 +25,15 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
   * relational parts — banding, bucket joins, verification — stay
   * DataFrame so Catalyst plans the shuffles.
   *
+  * Every heavy near-dup stage runs at the session's shuffle width,
+  * whatever the input's split count: the shingle kernel reads its text
+  * rows through a hash exchange on id (one small Parquet file is one
+  * scan split, which would run the kernel as one task), and the
+  * candidate dedup and exact verify read an explicit exchange on
+  * (id_a, id_b) (left to AQE, they coalesced into one task). AQE
+  * resizes neither exchange; a closing REBALANCE lets it still write a
+  * small result as one file.
+  *
   * Hashing is MD5-based and PORTABLE: `md5(x)` exists verbatim in
   * DuckDB, so every similarity value this module emits can be
   * recomputed independently by the SQL oracle (SparkEntry.oracleSql)
@@ -78,23 +87,29 @@ object Dedup {
 
   /** (id, sh): each doc's sorted distinct shingle hashes from the typed
     * kernel, hash-partitioned on id at the session's shuffle width.
-    * Every consumer of one call reads this ONE exchange: the postings
-    * and banding flatMaps, and both exact-verify join sides (which
-    * join on the aliased id and inherit this partitioning through the
-    * alias). All of them read the table whole (a typed flatMap
-    * deserializes both columns; an explode would instead get an
-    * inferred `size(sh) > 0` filter pushed below the exchange), so the
-    * exchange subtrees stay identical, AQE reuses the stage, and the
-    * kernel runs once per call. */
+    * The kernel itself reads the narrow (id, text) rows hash-exchanged
+    * on id at that width, so it runs as that many tasks even when the
+    * input is a single scan split; that text shuffle is a fraction of
+    * the shingle-array shuffle after the kernel. Every consumer of one
+    * call reads the (id, sh) exchange: the postings and banding
+    * flatMaps, and both exact-verify join sides (which join on the
+    * aliased id and inherit this partitioning through the alias). All
+    * of them read the table whole (a typed flatMap deserializes both
+    * columns; an explode would instead get an inferred `size(sh) > 0`
+    * filter pushed below the exchange), so the exchange subtrees stay
+    * identical, AQE reuses the stage, and the kernel runs once per
+    * call. */
   private def withShingles(docs: DataFrame, idCol: String, textCol: String,
                            k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
+    val width = spark.sessionState.conf.numShufflePartitions
     docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
+      .repartition(width, col("id"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, text) => (id, shingleHashes(text, k)) })
       .toDF("id", "sh")
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("id"))
+      .repartition(width, col("id"))
   }
 
   /** Inverted postings (shingle, id): a typed flatMap over
@@ -378,9 +393,13 @@ object Dedup {
   }
 
   /** Exact-Jaccard verify of candidate (id_a, id_b) rows, repeats
-    * included; the dedup keeps its map-side partial aggregation. The
-    * dedup shuffle is left to AQE's sizing: pinning it at the session's
-    * width splits a small result into that many output files. */
+    * included. The candidates take an explicit hash exchange on
+    * (id_a, id_b) at the session's width, which AQE does not coalesce,
+    * so the dedup (partial and final aggregate, both after the
+    * exchange), the joins that attach both shingle arrays and the
+    * Jaccard merge run as that many tasks. The result ends in a
+    * REBALANCE, which AQE sizes: a small result is still written as
+    * one file. */
   private def verifyJaccard(cand: DataFrame, sh: DataFrame,
                             threshold: Double): DataFrame = {
     val a = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
@@ -389,11 +408,14 @@ object Dedup {
     // early-exit (-1.0, filtered) for provably-below candidates
     val jUdf = udf((x: Array[Long], y: Array[Long]) =>
       jaccardSortedMin(x, y, threshold))
-    cand.dropDuplicates("id_a", "id_b")
+    cand.repartition(cand.sparkSession.sessionState.conf.numShufflePartitions,
+        col("id_a"), col("id_b"))
+      .dropDuplicates("id_a", "id_b")
       .join(a, "id_a").join(b, "id_b")
       .withColumn("jaccard", jUdf(col("sh_a"), col("sh_b")))
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
+      .hint("rebalance")
   }
 
   /** MinHash signature from sorted shingle hashes: m pseudo-

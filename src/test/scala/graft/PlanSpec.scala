@@ -15,6 +15,11 @@ class PlanSpec extends AnyFunSuite {
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** The near-dup shingle kernel is the MapPartitions whose stage reads
+    * the text (a query stage is a leaf, so this stops at the exchange). */
+  private def readsText(p: SparkPlan): Boolean =
+    p.output.exists(_.name == "text") || p.children.exists(readsText)
+
   test("q01: filter is pushed to the parquet scan and columns pruned") {
     val p = planOf(SparkEntry.queries("q01_filter_project")(spark, sf))
     assert(p.contains("PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,45.0)]"), p)
@@ -101,9 +106,6 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.MapPartitionsExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     object Walk extends AdaptiveSparkPlanHelper
-    // the shingle kernel is the MapPartitions whose stage reads the text
-    def readsText(p: SparkPlan): Boolean =
-      p.output.exists(_.name == "text") || p.children.exists(readsText)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     Seq(
       "q19" -> graft.ops.Dedup.minhashLshPairs(docs, threshold = 0.5),
@@ -126,6 +128,63 @@ class PlanSpec extends AnyFunSuite {
         assert(!p.toString.contains("collect_list"), s"$name: $p")
       }
     }
+  }
+
+  test("near-dup shingle kernel and candidate dedup run at the session width; q21 writes one file") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.adaptive._
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Walk extends AdaptiveSparkPlanHelper
+    // every shuffle of a final plan, pre-order, with the partition count
+    // its consumer reads it at: AQE's read node when it re-sized the
+    // shuffle, else the exchange's own width
+    def reads(p: SparkPlan, readAs: Option[Int] = None): Seq[(ShuffleExchangeExec, Int)] =
+      p match {
+        case a: AdaptiveSparkPlanExec => reads(a.executedPlan)
+        case r: AQEShuffleReadExec => reads(r.child, Some(r.partitionSpecs.size))
+        case s: QueryStageExec => reads(s.plan, readAs)
+        case e: ShuffleExchangeExec =>
+          (e, readAs.getOrElse(e.numPartitions)) +: e.children.flatMap(reads(_))
+        case other => other.children.flatMap(reads(_))
+      }
+    def hashedOn(e: ShuffleExchangeExec): Seq[String] = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+      case _ => Nil
+    }
+    val width = spark.sessionState.conf.numShufflePartitions
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    assert(docs.inputFiles.length == 1)
+    def q21(minDocs: Int) =
+      graft.ops.Dedup.ngramJaccardPairs(docs, threshold = 0.5, prefixMinDocs = minDocs)
+    Seq(
+      "q19" -> graft.ops.Dedup.minhashLshPairs(docs, threshold = 0.5),
+      "q21 prefix" -> q21(0),
+      "q21 full" -> q21(Int.MaxValue),
+      "q28" -> graft.ops.Dedup.ngramShingleStats(docs, threshold = 0.5)
+    ).foreach { case (name, df) =>
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      assert(p.toString.contains("isFinalPlan=true"), p)
+      val kernel = Walk.collectWithSubqueries(p) {
+        case m: MapPartitionsExec if readsText(m) => m
+      }.head
+      val textRead = reads(kernel).headOption
+      assert(textRead.exists { case (e, w) => hashedOn(e) == Seq("id") && w == width },
+        s"$name: the shingle kernel reads $textRead: $p")
+      if (!name.startsWith("q28")) {
+        val dedup = reads(p).filter { case (e, _) => hashedOn(e) == Seq("id_a", "id_b") }
+        assert(dedup.nonEmpty && dedup.forall(_._2 == width),
+          s"$name: candidate dedup read at ${dedup.map(_._2)} partitions: $p")
+      }
+    }
+    val out = java.nio.file.Files.createTempDirectory("q21-out").resolve("pairs").toString
+    val written = q21(Int.MaxValue)
+    written.write.parquet(out)
+    val parts = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.length == 1, parts.map(_.getName).toSeq)
+    assert(spark.read.parquet(out).count() == written.count())
   }
 
   test("whole-stage codegen covers the scan-side of aggregation queries") {

@@ -244,6 +244,42 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("near-dup results are identical at 1 and 4 shuffle partitions") {
+    // the shingle kernel, the candidate groups and the exact verify run
+    // at the session's shuffle width, which must change only the speed;
+    // a small vocabulary and an identical-doc flood past the cap put
+    // over-cap hub-star groups into every result
+    val rnd = new scala.util.Random(61)
+    val vocab = (1 to 12).map(i => s"w$i")
+    val base = (0 until 120).map(_ =>
+      Seq.fill(6 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    val texts = base ++ base.take(30).map(_ + " dup") ++ Seq.fill(12)("one flooded text body")
+    val d = docs(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }: _*)
+    val cap = 8
+    def pairs(df: DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def results(): Map[String, Any] = Map(
+      "q19" -> pairs(Dedup.minhashLshPairs(d, threshold = 0.5, maxBucket = cap)),
+      "q21 prefix" -> pairs(Dedup.ngramJaccardPairs(d, threshold = 0.5, maxDf = cap,
+        prefixMinDocs = 0)),
+      "q21 full" -> pairs(Dedup.ngramJaccardPairs(d, threshold = 0.5, maxDf = cap,
+        prefixMinDocs = Int.MaxValue)),
+      "q28" -> Dedup.ngramShingleStats(d, threshold = 0.5, maxDf = cap).head())
+    val key = "spark.sql.shuffle.partitions"
+    val restore = spark.conf.get(key)
+    val Seq(one, four) =
+      try Seq("1", "4").map { w => spark.conf.set(key, w); results() }
+      finally spark.conf.set(key, restore)
+    one.keys.foreach { name =>
+      assert(one(name) == four(name), s"$name: 1 partition ${one(name)} vs 4 ${four(name)}")
+    }
+    Seq("q19", "q21 prefix", "q21 full").foreach { name =>
+      assert(one(name).asInstanceOf[Set[_]].size > 12, s"$name: ${one(name)}")
+    }
+    assert(one("q28").asInstanceOf[org.apache.spark.sql.Row].getAs[Long]("n_overdf") > 0L,
+      s"no over-cap shingle: ${one("q28")}")
+  }
+
   test("PROPERTY: adaptive plans emit identical sets when maxDf BINDS") {
     // the round-4 defect: maxDf applied to prefix-df on one plan and
     // full-df on the other made the plans emit different sets once the

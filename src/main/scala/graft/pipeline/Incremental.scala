@@ -166,11 +166,9 @@ object Incremental {
     val spark = files.sparkSession
     import spark.implicits._
     files.mapPartitions { it =>
-      val re = Kg.AliasRe
       it.flatMap { f =>
-        val m = re.matcher(f.content)
         val out = Vector.newBuilder[(String, String, String)]
-        while (m.find()) out += ((f.repo, m.group(1), m.group(2)))
+        Kg.scanAliases(f.content)((a, b) => out += ((f.repo, a, b)))
         out.result()
       }
     }.toDF("repo", "src", "dst").dropDuplicates("repo", "src", "dst")

@@ -25,8 +25,6 @@ final case class AliasEdge(src: String, dst: String)
   */
 object Kg {
 
-  private[pipeline] val AliasRe = java.util.regex.Pattern.compile("// alias: (\\S+) (\\S+)")
-
   @inline private def isWordChar(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
       (c >= '0' && c <= '9') || c == '_'
@@ -76,38 +74,44 @@ object Kg {
   @inline private def isRegexWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
-  /** Alias facts found in content (drive entity merging). Manual scan
-    * implementing `// alias: (\S+) (\S+)` exactly: indexOf finds each
-    * literal prefix, the two maximal non-whitespace runs must be
-    * non-empty and separated by a single literal space; on a failed
-    * group the scan resumes one char later (like Matcher.find), on a
-    * match it resumes at the match end. Same corpus-scan hot-path
-    * motivation as detectMentions. */
+  /** The alias rule, written once: calls `emit` with both names of
+    * every `// alias: (\S+) (\S+)` match in `s`, in order. Manual scan
+    * implementing the regex exactly: indexOf finds each literal prefix,
+    * the two maximal non-whitespace runs must be non-empty and
+    * separated by a single literal space; on a failed group the scan
+    * resumes one char later (like Matcher.find), on a match it resumes
+    * at the match end. Same corpus-scan hot-path motivation as
+    * detectMentions. */
+  private[pipeline] def scanAliases(s: String)(emit: (String, String) => Unit): Unit = {
+    val n = s.length
+    var i = s.indexOf("// alias: ")
+    while (i >= 0) {
+      var p = i + 10
+      val s1 = p
+      while (p < n && !isRegexWs(s.charAt(p))) p += 1
+      var resume = i + 1
+      if (p > s1 && p < n && s.charAt(p) == ' ') {
+        val s2 = p + 1
+        p = s2
+        while (p < n && !isRegexWs(s.charAt(p))) p += 1
+        if (p > s2) {
+          emit(s.substring(s1, s2 - 1), s.substring(s2, p))
+          resume = p
+        }
+      }
+      i = if (resume < n) s.indexOf("// alias: ", resume) else -1
+    }
+  }
+
+  /** Alias facts found in content (drive entity merging), by
+    * [[scanAliases]]. */
   def detectAliases(files: Dataset[FileRow]): Dataset[AliasEdge] = {
     val spark = files.sparkSession
     import spark.implicits._
     files.mapPartitions { it =>
       it.flatMap { f =>
-        val s = f.content
-        val n = s.length
         val out = Vector.newBuilder[AliasEdge]
-        var i = s.indexOf("// alias: ")
-        while (i >= 0) {
-          var p = i + 10
-          val s1 = p
-          while (p < n && !isRegexWs(s.charAt(p))) p += 1
-          var resume = i + 1
-          if (p > s1 && p < n && s.charAt(p) == ' ') {
-            val s2 = p + 1
-            p = s2
-            while (p < n && !isRegexWs(s.charAt(p))) p += 1
-            if (p > s2) {
-              out += AliasEdge(s.substring(s1, s2 - 1), s.substring(s2, p))
-              resume = p
-            }
-          }
-          i = if (resume < n) s.indexOf("// alias: ", resume) else -1
-        }
+        scanAliases(f.content)((a, b) => out += AliasEdge(a, b))
         out.result()
       }
     }.dropDuplicates("src", "dst")

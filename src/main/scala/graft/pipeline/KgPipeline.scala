@@ -152,8 +152,10 @@ object KgPipeline {
         .join(broadcast(cm), col("entity") === col("ent_key"))
         .select(col("repo"), col("path"), col("canonical"), col("offset"))
       val tp = got.intersect(truth).count().toDouble
-      val precision = if (got.count() == 0) 0.0 else tp / got.count()
-      val recall = if (truth.count() == 0) 0.0 else tp / truth.count()
+      val nGot = got.count()
+      val nTruth = truth.count()
+      val precision = if (nGot == 0) 0.0 else tp / nGot
+      val recall = if (nTruth == 0) 0.0 else tp / nTruth
 
       val canonDf = canon
       val okGraphs = canonDf.where(col("status") === "ok").count()

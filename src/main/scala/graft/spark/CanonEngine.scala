@@ -207,6 +207,7 @@ object CanonEngine {
     }
   }
 
+  /** The local session every tool builds: AQE on, UTC, no UI. */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession =
     SparkSession.builder()
       .master(master)

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.spark.CanonEngine
 
 /** Regenerates the golden self-oracles (SparkEntry.GoldenOracleNames): runs each query at
   * the given sfDir (the driver verifies at sf0.01) and pins the
@@ -36,12 +36,7 @@ object GoldenOracleGen {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outPath) = args
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = CanonEngine.session("local[8]", shufflePartitions = 8)
     spark.sparkContext.setLogLevel("WARN")
 
     val entries = SparkEntry.GoldenOracleNames.map { name =>

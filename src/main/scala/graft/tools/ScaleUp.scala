@@ -2,8 +2,9 @@ package graft.tools
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import graft.spark.CanonEngine
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** sf1-equivalent corpus generator: expands the driver-provided sf0.1
   * tables by `factor` (default 10) into a larger deterministic corpus
@@ -46,12 +47,8 @@ object ScaleUp {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft_sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = CanonEngine.session(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", shufflePartitions = 32)
     spark.sparkContext.setLogLevel("WARN")
 
     // key strides: one power of ten above each domain's sf0.1 max

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.spark.CanonEngine
 import org.apache.spark.sql.SparkSession
 
 /** Two-cluster-size scaling evidence (BASELINE.json north rule).
@@ -21,19 +22,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ScalingBench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  def runJob(spark: SparkSession, cfg: graft.pipeline.Corpus.Config): Long = {
+  private def runJob(spark: SparkSession, cfg: graft.pipeline.Corpus.Config): Long = {
     import spark.implicits._
     val dictNames = (0 until cfg.nEntities).map(graft.pipeline.Corpus.entityName)
     val dict = spark.sparkContext.broadcast(dictNames.toSet)
@@ -81,7 +70,8 @@ object ScalingBench {
     * steal-time spikes; min-of-N isolates the job's own cost).
     * Prints `RESULT <secs> <okGraphs>` on stdout. */
   private def single(cores: Int, cfg: graft.pipeline.Corpus.Config): Unit = {
-    val spark = session(cores)
+    val spark = CanonEngine.session(s"local[$cores]", shufflePartitions = cores)
+    spark.sparkContext.setLogLevel("WARN")
     runJob(spark, cfg) // full-size warm-up: JIT + codegen
     // The host VM shows transient steal-time waves that inflate
     // in-task CPU 10x+. A trial only counts if a raw-CPU calibration

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 
 /** One row of the Iceberg-shaped source-code corpus
   * (BASELINE.json input_hint): `(repo, path, commit, lang, content)`
@@ -56,12 +56,6 @@ object Corpus {
     val suffix = if (k >= 256) (k / 256).toString else ""
     a + b + suffix
   }
-
-  /** Alias groups: entities (4g, 4g+1) are the same real-world entity;
-    * alias facts are planted in file contents as `// alias: A B` lines
-    * and must be merged by connected components. */
-  def aliasPairs(nEntities: Int): Seq[(String, String)] =
-    (0 until nEntities / 4).map(g => (entityName(4 * g), entityName(4 * g + 1)))
 
   final case class Config(
       nRepos: Int = 20,
@@ -161,26 +155,28 @@ object Corpus {
     (FileRow(repo, path, commit, lang, content, sha256Hex(content)), mentions.result())
   }
 
+  /** `pick` of every corpus file, built from its global index, one
+    * generation task per core of the session (a file depends only on
+    * its index, not on the width). */
+  private def built[A: Encoder](spark: SparkSession, cfg: Config)(
+      pick: ((FileRow, Seq[PlantedMention])) => IterableOnce[A]): Dataset[A] = {
+    val offsets = cfg.repoOffsets
+    spark.range(0, cfg.totalFiles, 1, spark.sparkContext.defaultParallelism).flatMap { gi =>
+      val r = repoOf(offsets, gi)
+      pick(buildFile(cfg, r, (gi - offsets(r)).toInt))
+    }
+  }
+
   /** Distributed corpus. */
   def generate(spark: SparkSession, cfg: Config): Dataset[FileRow] = {
     import spark.implicits._
-    val offsets = cfg.repoOffsets
-    spark.range(0, cfg.totalFiles, 1, numPartitions = 32).mapPartitions { it =>
-      it.map { gi =>
-        val r = repoOf(offsets, gi)
-        buildFile(cfg, r, (gi - offsets(r)).toInt)._1
-      }
-    }
+    built(spark, cfg)(f => Iterator.single(f._1))
   }
 
   /** Ground-truth mentions (same derivation — the oracle side). */
   def groundTruth(spark: SparkSession, cfg: Config): Dataset[PlantedMention] = {
     import spark.implicits._
-    val offsets = cfg.repoOffsets
-    spark.range(0, cfg.totalFiles, 1, numPartitions = 32).flatMap { gi =>
-      val r = repoOf(offsets, gi)
-      buildFile(cfg, r, (gi - offsets(r)).toInt)._2
-    }
+    built(spark, cfg)(_._2)
   }
 
   private def repoOf(offsets: Array[Long], gi: Long): Int = {

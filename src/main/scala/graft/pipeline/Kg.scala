@@ -254,72 +254,63 @@ object Kg {
     labels.select(col("id").as("entity"), col("label").as("canonical"))
   }
 
-  /** Triple emission: (repo, subjKind, subj, pred, obj, objKind).
+  /** The triple-emission rules, written once. `run` is one repo's
+    * linked mentions sorted by (path, offset, entity); `add` receives
+    * (subjKind, subj, pred, obj, objKind) for every triple in emission
+    * order, duplicates included:
+    *  - hasFile from the repo to a file on the file's first mention;
+    *  - type, mentionedIn and label for each mention;
+    *  - coOccursWith between consecutive distinct entities of a file.
     *
     * Entities become BLANK NODES (bnode label = canonical entity name,
     * content-derived — deterministic under rerun) so per-repo RDFC-1.0
-    * does real work; files/repos are IRIs; labels are literals.
-    * objKind: 0=IRI 1=bnode 2=literal.
-    *
-    * Relational single-exchange design (round 6): ONE explicit hash
-    * exchange on `repo`, then a (repo, path)/offset window (clustering
-    * satisfied by the repo partitioning — no second shuffle) feeds a
-    * codegen `explode` that emits type/mentionedIn/label/coOccursWith
-    * rows per mention and the hasFile row on each file's first mention
-    * (`lag` reproduces the previous sorted-group emission exactly).
-    * Because the emission stays relational (no typed flatMap object
-    * boundary), the `repo` partitioning is VISIBLE to every downstream
-    * consumer: dedupTriples' full-key dropDuplicates (repo ⊆ key) and
-    * canonicalizeTriples' per-repo grouping both reuse this one
-    * exchange, so the staged chain shuffles the ~small mention rows
-    * once instead of shuffling the (much larger) triple set twice —
-    * measured 27 MB vs 190 MB + 220 MB at the 20k-repo bench scale.
-    * (The earlier typed-flatMap version hid the partitioning behind
-    * DeserializeToObject, forcing both downstream exchanges.)
-    */
-  def emitTriples(linked: Dataset[LinkedMention], canonMap: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Column
-    import org.apache.spark.sql.expressions.Window
-    val cm = canonMap.withColumnRenamed("entity", "ent_key")
-    val m = linked.toDF()
-      .join(broadcast(cm), col("entity") === col("ent_key"))
-      .select(col("repo"), col("path"), col("canonical").as("ent"), col("offset"))
+    * does real work; files/repos are IRIs; labels are literals. */
+  private def emitRepo[M](repo: String, run: Iterator[M])(pathOf: M => String,
+      entityOf: M => String)(add: (Byte, String, String, String, Byte) => Unit): Unit = {
+    var path: String = null
+    var fileIri: String = null
+    var prev: String = null
+    run.foreach { m =>
+      val p = pathOf(m)
+      if (fileIri == null || p != path) { // a file's first mention
+        path = p
+        fileIri = s"urn:src:$repo/$p"
+        add(TermKind.Iri, s"urn:repo:$repo", "urn:p:hasFile", fileIri, TermKind.Iri)
+        prev = null
+      }
+      val ent = entityOf(m)
+      add(TermKind.BNode, ent, "urn:p:type", "urn:c:Entity", TermKind.Iri)
+      add(TermKind.BNode, ent, "urn:p:mentionedIn", fileIri, TermKind.Iri)
+      add(TermKind.BNode, ent, "urn:p:label", ent, TermKind.Literal)
+      if (prev != null && prev != ent)
+        add(TermKind.BNode, prev, "urn:p:coOccursWith", ent, TermKind.BNode)
+      prev = ent
+    }
+  }
 
-    val w = Window.partitionBy("repo", "path").orderBy(col("offset"), col("ent"))
-    val fileIri = concat(lit("urn:src:"), col("repo"), lit("/"), col("path"))
-    def t(subjKind: Int, subj: Column, pred: String, obj: Column, objKind: Int): Column =
-      struct(lit(subjKind.toByte).as("subjKind"), subj.as("subj"),
-        lit(pred).as("pred"), obj.as("obj"), lit(objKind.toByte).as("objKind"))
-    // slice(.., 1, 0/1) keeps the element type while making the
-    // conditional parts empty — concat of same-typed arrays stays
-    // whole-stage-codegen
-    def onlyIf(cond: Column, el: Column): Column =
-      slice(array(el), lit(1), when(cond, 1).otherwise(0))
-    // explicit width = spark.sql.shuffle.partitions: with a bare
-    // repartition(col) AQE coalesces this (small) mention shuffle
-    // toward its 1 MB floor, which then runs the WHOLE downstream
-    // chain — window, dedup, and the per-repo canonicalization kernel
-    // — at a fraction of the cluster's parallelism (measured 16 of 32
-    // tasks, kernel stage 2x slower). The knob stays scale-adaptive:
-    // it is the session's standard shuffle-width setting, not a
-    // constant tuned to this host.
-    val numParts = m.sparkSession.sessionState.conf.numShufflePartitions
-    m.repartition(numParts, col("repo"))
-      .withColumn("prev", lag(col("ent"), 1).over(w))
-      .withColumn("rn", row_number().over(w))
-      .select(col("repo"), explode(concat(
-        onlyIf(col("rn") === 1,
-          t(0, concat(lit("urn:repo:"), col("repo")), "urn:p:hasFile", fileIri, 0)),
-        array(
-          t(1, col("ent"), "urn:p:type", lit("urn:c:Entity"), 0),
-          t(1, col("ent"), "urn:p:mentionedIn", fileIri, 0),
-          t(1, col("ent"), "urn:p:label", col("ent"), 2)),
-        onlyIf(col("prev").isNotNull && col("prev") =!= col("ent"),
-          t(1, col("prev"), "urn:p:coOccursWith", col("ent"), 1))
-      )).as("tr"))
-      .select(col("repo"), col("tr.subjKind").as("subjKind"),
-        col("tr.subj").as("subj"), col("tr.pred").as("pred"),
-        col("tr.obj").as("obj"), col("tr.objKind").as("objKind"))
+  /** Mentions (repo, path, entity, offset, ...) resolved to their
+    * canonical entity through a broadcast join of `canonMap`, as
+    * (repo, path, canonical, offset); mentions of entities outside
+    * `canonMap` drop. */
+  def resolveMentions(mentions: DataFrame, canonMap: DataFrame): DataFrame =
+    mentions.join(broadcast(canonMap.withColumnRenamed("entity", "ent_key")),
+      col("entity") === col("ent_key"))
+      .select(col("repo"), col("path"), col("canonical"), col("offset"))
+
+  /** Triple emission: one [[TripleRow]] per [[emitRepo]] triple,
+    * duplicates included (objKind: 0=IRI 1=bnode 2=literal), of the
+    * [[resolveMentions resolved]] mentions, on the per-graph spine. Its
+    * output is declared hash-partitioned on `repo`: [[dedupTriples]]
+    * and [[canonicalizeTriples]] reuse the one mention exchange. */
+  def emitTriples(linked: Dataset[LinkedMention], canonMap: DataFrame): DataFrame = {
+    val spark = linked.sparkSession
+    import spark.implicits._
+    val m = resolveMentions(linked.toDF(), canonMap).as[(String, String, String, Long)]
+    CanonEngine.perGraph(m, "repo", "path", "offset", "canonical")(_._1, "repo") { (repo, run) =>
+      val out = Vector.newBuilder[TripleRow]
+      emitRepo(repo, run)(_._2, _._3)((sk, s, p, o, ok) => out += TripleRow(repo, sk, s, p, o, ok))
+      out.result()
+    }.toDF()
   }
 
   /** Triple dedup. `dropDuplicates` hash-partitions on the FULL key
@@ -343,16 +334,14 @@ object Kg {
   val MaxFusedDictRows: Int = 5000000
 
   /** FUSED fast path: linked mentions → canonical graphs with ONE
-    * wide dependency. The mentions take the per-graph spine
-    * ([[graft.spark.CanonEngine.perGraph]]) sorted by
-    * (repo, path, offset, cid); each repo's run emits its triples in
-    * one streaming pass per file, dedups them in-memory and runs
-    * RDFC-1.0. Compared to the staged emitTriples → dedupTriples →
-    * canonicalizeTriples chain this never materializes the
-    * (duplicate-heavy) triple set. The staged path remains for
-    * pipelines that materialize the triple table (metrics / downstream
-    * consumers). Result rows equal the staged chain's byte for byte.
-    */
+    * wide dependency. The mentions take the per-graph spine sorted by
+    * (repo, path, offset, cid); each repo's run goes through
+    * [[emitRepo]], as in [[emitTriples]], into an in-memory set, then
+    * RDFC-1.0. Unlike the staged emitTriples → dedupTriples →
+    * canonicalizeTriples chain, which remains for pipelines that
+    * materialize the triple table, this never materializes the
+    * (duplicate-heavy) triple set. Result rows equal the staged
+    * chain's byte for byte. */
   def canonicalizeFromMentions(linked: Dataset[LinkedMention], canonMap: DataFrame,
                                opts: CanonOptions = CanonOptions.default,
                                maxDictRows: Int = MaxFusedDictRows)
@@ -360,23 +349,18 @@ object Kg {
     val spark = linked.sparkSession
     import spark.implicits._
     // The canonical-entity dictionary is broadcast-sized BY DESIGN
-    // (canonMap already ships whole to every executor for the link join),
-    // so the corpus-wide exchange carries a 4-byte dictionary id per
-    // mention instead of the canonical-name string, and the kernel
-    // side decodes ids through ONE broadcast array — the shuffle
-    // shrinks and every decoded name is a SHARED instance (row
-    // machinery, not the kernel, dominates this stage: one less string
-    // allocation per shuffled row). Ordering: ids index a dictionary
-    // sorted in CODE-POINT order — the same order Spark's UTF8String
-    // binary comparison gives the staged path's window sort — so
-    // (offset, id) ties break identically to the staged (offset, name)
-    // sort even for astral-plane names (Java string order would
-    // diverge there; a mention CAN carry several same-offset
-    // candidates whenever two dictionary entries clear the link-score
-    // threshold).
-    // the collect is gated by an early-stopping limit probe (the
-    // probe IS the data when it passes — one pass, driver memory
-    // bounded at maxDictRows + 1 rows even on a pathological input)
+    // (canonMap already ships whole to every executor for the link
+    // join), so the exchange carries a 4-byte dictionary id per mention
+    // instead of the name, and the kernel side decodes ids through ONE
+    // broadcast array: a smaller shuffle and a SHARED name instance per
+    // decoded row. Ids index a dictionary sorted in CODE-POINT order,
+    // the order of Spark's UTF8String comparison in the staged sort, so
+    // (offset, id) ties break as the staged (offset, name) ties do even
+    // for astral-plane names (a mention CAN carry several same-offset
+    // candidates when two entries clear the link-score threshold).
+    // The collect is gated by an early-stopping limit probe: the probe
+    // IS the data when it passes, and driver memory stays bounded at
+    // maxDictRows + 1 rows.
     val canonPairs = canonMap
       .select(col("entity").cast("string"), col("canonical").cast("string"))
       .as[(String, String)].limit(maxDictRows + 1).collect()
@@ -401,30 +385,12 @@ object Kg {
       .where(col("cid") >= 0) // mentions of entities outside canonMap drop
       .as[(String, String, Int, Long)]
     val bcIdx = spark.sparkContext.broadcast(canonIdx)
-    CanonEngine.perGraph(m, "repo", "path", "offset", "cid")(_._1) { (repo, run) =>
+    CanonEngine.perGraph(m, "repo", "path", "offset", "cid")(_._1, "key") { (repo, run) =>
       val idx = bcIdx.value
       val seen = new mutable.HashSet[(Byte, String, String, String, Byte)]
       val quads = new mutable.ArrayBuffer[Quad]
-      def add(sk: Byte, s: String, p: String, o: String, ok: Byte): Unit =
-        if (seen.add((sk, s, p, o, ok)))
-          quads += Quad(sk, s, p, ok, o, "", "", TermKind.DefaultGraph, "")
-      var path: String = null
-      var fileIri: String = null
-      var prevId = -1
-      run.foreach { case (_, p, cid, _) =>
-        if (fileIri == null || p != path) { // a file's first mention
-          path = p
-          fileIri = s"urn:src:$repo/$p"
-          add(TermKind.Iri, s"urn:repo:$repo", "urn:p:hasFile", fileIri, TermKind.Iri)
-          prevId = -1
-        }
-        val ent = idx(cid)
-        add(TermKind.BNode, ent, "urn:p:type", "urn:c:Entity", TermKind.Iri)
-        add(TermKind.BNode, ent, "urn:p:mentionedIn", fileIri, TermKind.Iri)
-        add(TermKind.BNode, ent, "urn:p:label", ent, TermKind.Literal)
-        if (prevId >= 0 && prevId != cid)
-          add(TermKind.BNode, idx(prevId), "urn:p:coOccursWith", ent, TermKind.BNode)
-        prevId = cid
+      emitRepo(repo, run)(_._2, m => idx(m._3)) { (sk, s, p, o, ok) =>
+        if (seen.add((sk, s, p, o, ok))) quads += Quad.triple(sk, s, p, ok, o)
       }
       // `seen` already enforced set semantics — skip the kernel's dedup
       Iterator.single(CanonEngine.canonicalizeOne(repo, quads.toVector, opts,
@@ -447,10 +413,9 @@ object Kg {
     import spark.implicits._
     val rows = triples.select("repo", "subjKind", "subj", "pred", "obj", "objKind")
       .as[TripleRow]
-    CanonEngine.perGraph(rows, "repo")(_.repo) { (repo, run) =>
-      Iterator.single(CanonEngine.canonicalizeOne(repo, run.map(t =>
-        Quad(t.subjKind, t.subj, t.pred, t.objKind, t.obj, "", "",
-          TermKind.DefaultGraph, "")).toVector, opts))
+    CanonEngine.perGraph(rows, "repo")(_.repo, "key") { (repo, run) =>
+      Iterator.single(CanonEngine.canonicalizeOne(repo,
+        run.map(t => Quad.triple(t.subjKind, t.subj, t.pred, t.objKind, t.obj)).toVector, opts))
     }
   }
 }

@@ -25,10 +25,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * Scale design notes (100 TB):
   *  - corpus scan is a plain columnar scan: filters/pruning reach
   *    parquet; stages select only needed columns before wide ops.
-  *  - dictionary joins are broadcast; the only big shuffles are the
-  *    hash exchange on repo in Kg.emitTriples (the triple dedup reuses
-  *    it) and the per-repo exchange into the kernel
-  *    (CanonEngine.perGraph; unavoidable: graph-local state).
+  *  - dictionary joins are broadcast; the only big shuffle is the
+  *    exchange of the linked mentions on repo into the per-graph spine
+  *    (CanonEngine.perGraph; unavoidable: graph-local state) that runs
+  *    Kg.emitTriples. The spine declares its output hash-partitioned
+  *    on repo, so the triple dedup and the per-repo canonicalization
+  *    reuse that exchange instead of shuffling the larger triple set.
   *  - CC runs on the tiny alias-edge set, localCheckpoint per
   *    iteration truncates lineage.
   *  - all stage outputs are Parquet → resume cost is O(changed
@@ -144,26 +146,32 @@ object KgPipeline {
 
       // triple P/R vs the reference (planted) extraction, computed on
       // entity mention sets resolved through the same canonical map
-      val cm = canonMap.withColumnRenamed("entity", "ent_key")
-      val truth = Corpus.groundTruth(spark, cfg).toDF()
-        .join(broadcast(cm), col("entity") === col("ent_key"))
-        .select(col("repo"), col("path"), col("canonical"), col("offset"))
-      val got = spark.read.parquet(stageDir("links"))
-        .join(broadcast(cm), col("entity") === col("ent_key"))
-        .select(col("repo"), col("path"), col("canonical"), col("offset"))
-      val tp = got.intersect(truth).count().toDouble
-      val nGot = got.count()
-      val nTruth = truth.count()
-      val precision = if (nGot == 0) 0.0 else tp / nGot
-      val recall = if (nTruth == 0) 0.0 else tp / nTruth
+      val (tp, nGot, nTruth) = matchCounts(
+        Kg.resolveMentions(spark.read.parquet(stageDir("links")), canonMap),
+        Kg.resolveMentions(Corpus.groundTruth(spark, cfg).toDF(), canonMap))
+      val precision = if (nGot == 0) 0.0 else tp.toDouble / nGot
+      val recall = if (nTruth == 0) 0.0 else tp.toDouble / nTruth
 
-      val canonDf = canon
-      val okGraphs = canonDf.where(col("status") === "ok").count()
-      val totalGraphs = canonDf.count()
-
-      PipelineReport(results.result(), precision, recall, okGraphs,
-        totalGraphs, manifest)
+      val graphs = canon.agg(count(when(col("status") === "ok", 1)), count(lit(1))).head()
+      PipelineReport(results.result(), precision, recall, graphs.getLong(0),
+        graphs.getLong(1), manifest)
     }
+  }
+
+  /** (true positives, got rows, truth rows) of two mention sets in one
+    * action: one group per distinct (repo, path, canonical, offset)
+    * with a row count per side. A group with rows on both sides is a
+    * true positive (`intersect`'s set semantics); the sums keep
+    * `count()`'s row semantics. */
+  private[pipeline] def matchCounts(got: DataFrame, truth: DataFrame): (Long, Long, Long) = {
+    val key = Seq("repo", "path", "canonical", "offset").map(col)
+    def side(df: DataFrame, g: Int) = df.select(key :+ lit(g).as("g") :+ lit(1 - g).as("t"): _*)
+    val r = side(got, 1).union(side(truth, 0))
+      .groupBy(key: _*).agg(sum("g").as("g"), sum("t").as("t"))
+      .agg(count(when(col("g") > 0 && col("t") > 0, 1)),
+        coalesce(sum("g"), lit(0L)), coalesce(sum("t"), lit(0L)))
+      .head()
+    (r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
   final case class PipelineReport(

@@ -2,8 +2,15 @@ package graft.spark
 
 import graft.canon.{CanonException, CanonOptions, HndqCallLimitExceededException, Rdfc10}
 import graft.rdf.Quad
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, MapPartitions, SerializeFromObject}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
+import org.apache.spark.sql.execution.{SerializeFromObjectExec, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StringType
 
 /** One quad tagged with the graph (partition) key it belongs to.
   * In the KG pipeline the key is the repo; for fixture I/O it is a
@@ -162,13 +169,21 @@ object CanonEngine {
     * small shuffle into one partition and run every graph in one
     * task), sort each partition by `key` then `orderBy`, and call `f`
     * once per run of rows with equal `keyOf`. `f` must read what it
-    * needs of the run before it returns; the spine drains the rest. */
+    * needs of the run before it returns; the spine drains the rest.
+    *
+    * Output contract: `f` emits only rows of its run's key, in the
+    * string column `resultKey` of `R`, so the output is declared
+    * hash-partitioned on that column ([[PerGraphStrategy]]) and a later
+    * keyed operator on it adds no exchange. */
   def perGraph[T, R: Encoder](rows: Dataset[T], key: String, orderBy: String*)(
-      keyOf: T => String)(f: (String, Iterator[T]) => IterableOnce[R]): Dataset[R] =
+      keyOf: T => String, resultKey: String)(
+      f: (String, Iterator[T]) => IterableOnce[R]): Dataset[R] = {
+    PerGraphStrategy.setup(rows.sparkSession)
+    val width = rows.sparkSession.sessionState.conf.numShufflePartitions
     rows
-      .repartition(rows.sparkSession.sessionState.conf.numShufflePartitions, col(key))
+      .repartition(width, col(key))
       .sortWithinPartitions((key +: orderBy).map(col): _*)
-      .mapPartitions { it =>
+      .mapPartitions(new Runs[T, R](resultKey, width)({ it =>
         val in = it.buffered
         Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
           val k = keyOf(in.head)
@@ -180,7 +195,17 @@ object CanonEngine {
           run.foreach(_ => ())
           out
         }
-      }
+      }))
+  }
+
+  /** The spine's partition function, named so that [[PerGraphStrategy]]
+    * finds the spine in an optimized plan and reads its result key.
+    * Not a case class: plans compare functions by identity. */
+  private[spark] final class Runs[T, R](val resultKey: String, val width: Int)(
+      f: Iterator[T] => Iterator[R]) extends (Iterator[T] => Iterator[R]) with Serializable {
+    def apply(it: Iterator[T]): Iterator[R] = f(it)
+    override def toString: String = s"graft.spark.CanonEngine.perGraph($resultKey, $width)"
+  }
 
   /** The distributed operator over keyed quads. */
   def canonicalizePerGraph(
@@ -189,7 +214,7 @@ object CanonEngine {
   ): Dataset[CanonResult] = {
     val spark = quads.sparkSession
     import spark.implicits._
-    perGraph(quads, "key")(_.key) { (key, run) =>
+    perGraph(quads, "key")(_.key, "key") { (key, run) =>
       Iterator.single(canonicalizeOne(key,
         run.filterNot(_.isPlaceholder).map(_.quad).toVector, opts))
     }
@@ -217,4 +242,34 @@ object CanonEngine {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+}
+
+/** The spine's serialized output, declared hash-partitioned on its
+  * result key. The exec runs no code. */
+final case class PerGraphOutputExec(override val outputPartitioning: Partitioning, child: SparkPlan)
+    extends UnaryExecNode {
+  override def output: Seq[Attribute] = child.output
+  override protected def doExecute(): RDD[InternalRow] = child.execute()
+  override protected def withNewChildInternal(c: SparkPlan): PerGraphOutputExec = copy(child = c)
+}
+
+/** Plans the serializer over a [[CanonEngine.perGraph]] spine under a
+  * [[PerGraphOutputExec]]. It matches the optimized plan, so the
+  * optimizer's rewrites around the spine (a typed operator taking its
+  * objects, a pruned key column) still apply. The spine adds it to
+  * its session's `experimental.extraStrategies` on first use. */
+object PerGraphStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case SerializeFromObject(serializer, m @ MapPartitions(runs: CanonEngine.Runs[_, _], _, _)) =>
+      serializer.find(e => e.name == runs.resultKey && e.dataType == StringType).toList.map { k =>
+        PerGraphOutputExec(HashPartitioning(Seq(k.toAttribute), runs.width),
+          SerializeFromObjectExec(serializer, planLater(m)))
+      }
+    case _ => Nil
+  }
+
+  def setup(spark: SparkSession): Unit = {
+    val ex = spark.experimental
+    if (!ex.extraStrategies.contains(this)) ex.extraStrategies = this +: ex.extraStrategies
+  }
 }

@@ -16,13 +16,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
 
-/** Literal option parsing shared by the scalar RDFC-1.0 functions:
-  * each function accepts up to two trailing LITERAL options after the
-  * document column — a hash-algorithm string ('SHA-256' | 'SHA-384')
-  * and/or an integer HNDQ call limit, in either order (the types
-  * disambiguate). This is the SQL face of [[CanonOptions]]; round-4
-  * hard-coded `CanonOptions.default`, so SHA-384 and custom budgets
-  * were Dataset-API-only. */
+/** Literal option parsing shared by the RDFC-1.0 SQL functions, the
+  * SQL face of [[CanonOptions]]: up to two trailing LITERAL options
+  * after the document column — a hash-algorithm string ('SHA-256' |
+  * 'SHA-384') and/or an integer HNDQ call limit, in either order (the
+  * types disambiguate). */
 private[spark] object ScalarCanonOptions {
   val HashAlgorithms: Set[String] = Set("SHA-256", "SHA-384")
 
@@ -55,37 +53,44 @@ private[spark] object ScalarCanonOptions {
   }
 }
 
-/** SQL scalar function `rdfc10_canonicalize(nquads_doc[, hashAlg][,
-  * hndqLimit])`: parse an N-Quads document string, canonicalize it
-  * (RDFC-1.0), return the canonical N-Quads document. NULL on
-  * unparseable or poison input (HNDQ budget exceeded) — data errors
-  * stay data, they never kill the query, matching the per-graph
-  * error-row semantics of [[CanonEngine.canonicalizePerGraph]]; use
-  * [[Rdfc10Status]] (`rdfc10_status`) to distinguish WHICH failure a
-  * NULL hides.
-  *
-  * CodegenFallback is deliberate: the kernel is a whole-document
-  * recursive algorithm — there is nothing for codegen to fuse, and
-  * the expression sits at the top of its projection.
-  */
-case class Rdfc10Canonicalize(child: Expression,
-                              options: CanonOptions = CanonOptions.default)
-    extends UnaryExpression with CodegenFallback {
+/** The scalar RDFC-1.0 functions: an N-Quads document string in, a
+  * string out, `result` of its parsed quads. A parse or
+  * canonicalization error (HNDQ budget exceeded) becomes `onError`,
+  * NULL by default: data errors stay data, as the per-graph error
+  * rows of [[CanonEngine.canonicalizePerGraph]] do. CodegenFallback
+  * is deliberate: the kernel is a whole-document recursive algorithm,
+  * with nothing for codegen to fuse. */
+abstract class ScalarCanonFunction extends UnaryExpression with CodegenFallback {
+  def options: CanonOptions
+  protected def result(quads: Vector[Quad]): String
+  protected def onError(e: RuntimeException): String = null
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string column")
   override def dataType: DataType = StringType
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val out =
+      try result(NQuadsParser.parseDocument(input.asInstanceOf[UTF8String].toString))
+      catch {
+        case e: CanonException => onError(e)
+        case e: NQuadsParser.ParseException => onError(e)
+      }
+    if (out == null) null else UTF8String.fromString(out)
+  }
+}
+
+/** SQL scalar function `rdfc10_canonicalize(nquads_doc[, hashAlg][,
+  * hndqLimit])`: the canonical N-Quads document, NULL on unparseable
+  * or poison input; use [[Rdfc10Status]] (`rdfc10_status`) to
+  * distinguish WHICH failure a NULL hides. */
+case class Rdfc10Canonicalize(child: Expression,
+                              options: CanonOptions = CanonOptions.default)
+    extends ScalarCanonFunction {
   override def prettyName: String = "rdfc10_canonicalize"
-
-  override protected def nullSafeEval(input: Any): Any =
-    try {
-      val quads = NQuadsParser.parseDocument(input.asInstanceOf[UTF8String].toString)
-      UTF8String.fromString(Rdfc10.canonicalize(quads, options))
-    } catch {
-      case _: CanonException | _: NQuadsParser.ParseException => null
-    }
-
+  override protected def result(quads: Vector[Quad]): String =
+    Rdfc10.canonicalize(quads, options)
   override protected def withNewChildInternal(newChild: Expression): Rdfc10Canonicalize =
     copy(child = newChild)
 }
@@ -95,22 +100,10 @@ case class Rdfc10Canonicalize(child: Expression,
   * hndqLimit])` → JSON map. */
 case class Rdfc10Issue(child: Expression,
                        options: CanonOptions = CanonOptions.default)
-    extends UnaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string column")
-  override def dataType: DataType = StringType
+    extends ScalarCanonFunction {
   override def prettyName: String = "rdfc10_issue"
-
-  override protected def nullSafeEval(input: Any): Any =
-    try {
-      val quads = NQuadsParser.parseDocument(input.asInstanceOf[UTF8String].toString)
-      UTF8String.fromString(CanonEngine.issuedMapJson(Rdfc10.issue(quads, options).issuedMap))
-    } catch {
-      case _: CanonException | _: NQuadsParser.ParseException => null
-    }
-
+  override protected def result(quads: Vector[Quad]): String =
+    CanonEngine.issuedMapJson(Rdfc10.issue(quads, options).issuedMap)
   override protected def withNewChildInternal(newChild: Expression): Rdfc10Issue =
     copy(child = newChild)
 }
@@ -123,26 +116,15 @@ case class Rdfc10Issue(child: Expression,
   * tell malformed input from poison graphs without leaving SQL. */
 case class Rdfc10Status(child: Expression,
                         options: CanonOptions = CanonOptions.default)
-    extends UnaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string column")
-  override def dataType: DataType = StringType
+    extends ScalarCanonFunction {
   override def prettyName: String = "rdfc10_status"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val status =
-      try {
-        val quads = NQuadsParser.parseDocument(input.asInstanceOf[UTF8String].toString)
-        try { Rdfc10.issue(quads, options); "ok" }
-        catch { case e: CanonException => CanonEngine.statusOf(e) }
-      } catch {
-        case e: NQuadsParser.ParseException => s"parse_error: ${e.getMessage}"
-      }
-    UTF8String.fromString(status)
+  override protected def result(quads: Vector[Quad]): String = {
+    Rdfc10.issue(quads, options); "ok"
   }
-
+  override protected def onError(e: RuntimeException): String = e match {
+    case c: CanonException => CanonEngine.statusOf(c)
+    case p => s"parse_error: ${p.getMessage}"
+  }
   override protected def withNewChildInternal(newChild: Expression): Rdfc10Status =
     copy(child = newChild)
 }
@@ -355,13 +337,10 @@ object Rdfc10CanonDataset {
     * SQL the same budget knob as the Dataset API. */
   def build(args0: Seq[Expression]): Expression = {
     val (args, limit) = args0.lastOption match {
-      case Some(Literal(i: Int, IntegerType))
-          if args0.length == 6 || args0.length == 10 =>
-        // same analysis-time validation as the scalar functions: a
-        // non-positive budget would poison every non-trivial group
-        require(i > 0,
-          s"rdfc10_canon_dataset: HNDQ call limit must be positive, got $i")
-        (args0.init, i)
+      case Some(l @ Literal(_: Int, IntegerType)) if args0.length == 6 || args0.length == 10 =>
+        // the scalar functions' analysis-time validation: a non-positive
+        // budget would poison every non-trivial group
+        (args0.init, ScalarCanonOptions.parse("rdfc10_canon_dataset", Seq(l)).hndqCallLimit)
       case _ => (args0, CanonOptions.default.hndqCallLimit)
     }
     args.length match {
@@ -376,19 +355,14 @@ object Rdfc10CanonDataset {
 }
 
 object GraftFunctions {
+  private def scalar(name: String, cls: Class[_], make: (Expression, CanonOptions) => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (children: Seq[Expression]) => make(children.head, ScalarCanonOptions.parse(name, children.tail)))
+
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("rdfc10_canonicalize"),
-      new ExpressionInfo(classOf[Rdfc10Canonicalize].getName, "rdfc10_canonicalize"),
-      (children: Seq[Expression]) => Rdfc10Canonicalize(children.head,
-        ScalarCanonOptions.parse("rdfc10_canonicalize", children.tail))),
-    (FunctionIdentifier("rdfc10_issue"),
-      new ExpressionInfo(classOf[Rdfc10Issue].getName, "rdfc10_issue"),
-      (children: Seq[Expression]) => Rdfc10Issue(children.head,
-        ScalarCanonOptions.parse("rdfc10_issue", children.tail))),
-    (FunctionIdentifier("rdfc10_status"),
-      new ExpressionInfo(classOf[Rdfc10Status].getName, "rdfc10_status"),
-      (children: Seq[Expression]) => Rdfc10Status(children.head,
-        ScalarCanonOptions.parse("rdfc10_status", children.tail))),
+    scalar("rdfc10_canonicalize", classOf[Rdfc10Canonicalize], Rdfc10Canonicalize(_, _)),
+    scalar("rdfc10_issue", classOf[Rdfc10Issue], Rdfc10Issue(_, _)),
+    scalar("rdfc10_status", classOf[Rdfc10Status], Rdfc10Status(_, _)),
     (FunctionIdentifier("rdfc10_canon_dataset"),
       new ExpressionInfo(classOf[Rdfc10CanonDataset].getName, "rdfc10_canon_dataset"),
       (children: Seq[Expression]) => Rdfc10CanonDataset.build(children))

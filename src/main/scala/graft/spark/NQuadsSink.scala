@@ -52,7 +52,7 @@ object NQuadsSink {
       : DataFrame = {
     val spark = quads.sparkSession
     import spark.implicits._
-    statements(CanonEngine.perGraph(quads, "key")(_.key) { (key, run) =>
+    statements(CanonEngine.perGraph(quads, "key")(_.key, "key") { (key, run) =>
       val res = Rdfc10.issue(run.filterNot(_.isPlaceholder).map(_.quad).toVector, opts)
       Rdfc10.relabel(res.dedupedQuads, res.issuedMap).iterator.map(q => KeyedQuad(key, q))
     })

@@ -68,12 +68,33 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("the staged KG chain plans exactly one hash exchange") {
-    // emitTriples' exchange on repo serves the dedup and the per-graph
-    // spine of canonicalizeTriples (q27 is that chain)
-    val plan = planOf(SparkEntry.queries("q27_kg_canon")(spark, sf))
+    // the mention exchange on repo into emitTriples' per-graph spine
+    // serves the dedup and the spine of canonicalizeTriples (q27 is
+    // that chain)
+    val q27 = SparkEntry.queries("q27_kg_canon")(spark, sf).queryExecution.executedPlan
+    val plan = q27.toString
     val exchanges = plan.linesIterator.count(_.contains("Exchange hashpartitioning"))
     assert(exchanges == 1, plan)
     assert(plan.contains("MapPartitions graft.spark.CanonEngine"), plan)
+    // the triples come from the per-graph emitter, not a relational
+    // window/explode copy of its rules
+    object Walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val relational = Walk.collect(q27) {
+      case n if n.nodeName.contains("Window") || n.nodeName.contains("Generate") => n.nodeName
+    }
+    assert(relational.isEmpty, plan)
+  }
+
+  test("a typed filter over the per-graph spine runs on its objects") {
+    // the spine's declared partitioning must not keep the optimizer
+    // from dropping the serialize/deserialize pair around the filter
+    import spark.implicits._
+    val docs = spark.createDataset(Seq(("g1", "_:a <urn:p> _:b .")))
+    val ok = graft.spark.CanonEngine.canonicalizePerGraph(
+      graft.spark.CanonEngine.parseDocuments(docs)).filter(_.status == "ok")
+    val plan = planOf(ok.toDF())
+    assert(!plan.contains("newInstance(class graft.spark.CanonResult)"), plan)
+    assert(ok.count() == 1)
   }
 
   test("the fused KG path plans one hash exchange at the session width, no MapGroups") {

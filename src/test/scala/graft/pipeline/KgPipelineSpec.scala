@@ -134,6 +134,19 @@ class KgPipelineSpec extends AnyFunSuite {
     assert(r2.okGraphs == r1.okGraphs)
   }
 
+  test("P/R counts keep intersect's set and count()'s row semantics") {
+    import spark.implicits._
+    def rows(r: (String, String, String, Long)*) =
+      r.toDF("repo", "path", "canonical", "offset")
+    val both = ("r1", "a.c", "Foo", 5L)
+    // `both` twice on the got side, one row on each side only
+    val got = rows(both, both, ("r1", "a.c", "Bar", 2L))
+    val truth = rows(both, ("r2", "c.c", "Baz", 4L))
+    assert(KgPipeline.matchCounts(got, truth) == ((1L, 3L, 2L)))
+    assert(got.intersect(truth).count() == 1L && got.count() == 3L && truth.count() == 2L)
+    assert(KgPipeline.matchCounts(got.limit(0), truth) == ((0L, 0L, 2L)))
+  }
+
   test("fused canonicalization equals the staged path byte-for-byte") {
     import spark.implicits._
     val dictNames = (0 until cfg.nEntities).map(Corpus.entityName)
@@ -185,6 +198,69 @@ class KgPipelineSpec extends AnyFunSuite {
     val fused = Kg.canonicalizeFromMentions(linked, canonMap)
       .collect().map(r => r.key -> r.canonicalNQuads).toMap
     assert(fused == staged)
+  }
+
+  test("the triple-emission rules: literal rows for two files, a tie and a repeat") {
+    import spark.implicits._
+    // r1/a.c: Baz and Foo tie at offset 5 (the canonical name breaks
+    // it), FooAlias resolves to Foo so Foo repeats back to back (no
+    // self coOccursWith), Ghost is outside canonMap and drops; r1/b.c
+    // starts a new file, so its first mention links to nothing before
+    val linked = spark.createDataset(Seq(
+      LinkedMention("r1", "a.c", "Foo", 5L, 1.0),
+      LinkedMention("r1", "b.c", "Bar", 1L, 1.0),
+      LinkedMention("r1", "a.c", "FooAlias", 9L, 1.0),
+      LinkedMention("r1", "a.c", "Ghost", 7L, 1.0),
+      LinkedMention("r1", "a.c", "Bar", 2L, 1.0),
+      LinkedMention("r2", "c.c", "Baz", 4L, 1.0),
+      LinkedMention("r1", "a.c", "Baz", 5L, 1.0)))
+    val canonMap = Seq("Bar" -> "Bar", "Baz" -> "Baz", "Foo" -> "Foo", "FooAlias" -> "Foo")
+      .toDF("entity", "canonical")
+    val emitted = Kg.emitTriples(linked, canonMap)
+    // duplicates included: 4 + 4 + 4 + 3 triples for a.c, 1 + 3 for
+    // b.c, 4 for r2
+    assert(emitted.count() == 23)
+    val (a, b, c) = ("urn:src:r1/a.c", "urn:src:r1/b.c", "urn:src:r2/c.c")
+    def ent(e: String, p: String, o: String, ok: Int) = (1, e, s"urn:p:$p", o, ok)
+    val expected = Set(
+      "r1" -> (0, "urn:repo:r1", "urn:p:hasFile", a, 0),
+      "r1" -> (0, "urn:repo:r1", "urn:p:hasFile", b, 0),
+      "r1" -> ent("Bar", "type", "urn:c:Entity", 0),
+      "r1" -> ent("Bar", "mentionedIn", a, 0),
+      "r1" -> ent("Bar", "mentionedIn", b, 0),
+      "r1" -> ent("Bar", "label", "Bar", 2),
+      "r1" -> ent("Bar", "coOccursWith", "Baz", 1),
+      "r1" -> ent("Baz", "type", "urn:c:Entity", 0),
+      "r1" -> ent("Baz", "mentionedIn", a, 0),
+      "r1" -> ent("Baz", "label", "Baz", 2),
+      "r1" -> ent("Baz", "coOccursWith", "Foo", 1),
+      "r1" -> ent("Foo", "type", "urn:c:Entity", 0),
+      "r1" -> ent("Foo", "mentionedIn", a, 0),
+      "r1" -> ent("Foo", "label", "Foo", 2),
+      "r2" -> (0, "urn:repo:r2", "urn:p:hasFile", c, 0),
+      "r2" -> ent("Baz", "type", "urn:c:Entity", 0),
+      "r2" -> ent("Baz", "mentionedIn", c, 0),
+      "r2" -> ent("Baz", "label", "Baz", 2))
+    val got = Kg.dedupTriples(emitted).as[TripleRow].collect()
+      .map(t => t.repo -> (t.subjKind.toInt, t.subj, t.pred, t.obj, t.objKind.toInt))
+    assert(got.length == expected.size && got.toSet == expected)
+  }
+
+  test("emitTriples rows sit in the hash partition of their repo") {
+    import spark.implicits._
+    val cfg8 = Corpus.Config(nRepos = 8, baseFilesPerRepo = 6)
+    val dictNames = (0 until cfg8.nEntities).map(Corpus.entityName)
+    val files = Corpus.generate(spark, cfg8)
+    val linked = Kg.linkMentions(
+      Kg.detectMentions(files, spark.sparkContext.broadcast(dictNames.toSet)),
+      dictNames.toDF("name"))
+    val cc = Kg.connectedComponents(dictNames.toDF("name"), Kg.detectAliases(files))
+    val width = spark.sessionState.conf.numShufflePartitions
+    val placed = Kg.emitTriples(linked, cc).select(col("repo"),
+      (spark_partition_id() === pmod(hash(col("repo")), lit(width))).as("home"))
+      .groupBy("home").agg(count(lit(1)).as("n"), countDistinct("repo").as("repos"))
+      .as[(Boolean, Long, Long)].collect()
+    assert(placed.map(r => r._1 -> r._3).toSeq == Seq(true -> 8L), placed.toSeq)
   }
 
   test("canonical output is deterministic across independent work dirs") {

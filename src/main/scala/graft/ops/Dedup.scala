@@ -32,7 +32,16 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
   * candidate dedup and exact verify read an explicit exchange on
   * (id_a, id_b) (left to AQE, they coalesced into one task). AQE
   * resizes neither exchange; a closing REBALANCE lets it still write a
-  * small result as one file.
+  * small result as one file. Each candidate task drops the repeated
+  * pairs it still holds before that exchange ([[LshUtil.RepeatFilter]]).
+  *
+  * Postings move only where a plan needs them grouped by shingle. The
+  * per-shingle df that q28 and q21's prefix plan rank by is counted
+  * with a map-side partial aggregate over the kernel's tasks, collected
+  * by a bounded probe and broadcast ([[collectDf]]), and each doc's
+  * shingles are ranked where its row already is ([[rankedById]]).
+  * A df table past the session's broadcast threshold falls back to a
+  * postings exchange on the shingle and a rank exchange on id.
   *
   * Hashing is MD5-based and PORTABLE: `md5(x)` exists verbatim in
   * DuckDB, so every similarity value this module emits can be
@@ -86,34 +95,36 @@ object Dedup {
   }
 
   /** (id, sh): each doc's sorted distinct shingle hashes from the typed
-    * kernel, hash-partitioned on id at the session's shuffle width.
-    * The kernel itself reads the narrow (id, text) rows hash-exchanged
-    * on id at that width, so it runs as that many tasks even when the
-    * input is a single scan split; that text shuffle is a fraction of
-    * the shingle-array shuffle after the kernel. Every consumer of one
-    * call reads the (id, sh) exchange: the postings and banding
-    * flatMaps, and both exact-verify join sides (which join on the
-    * aliased id and inherit this partitioning through the alias). All
-    * of them read the table whole (a typed flatMap deserializes both
-    * columns; an explode would instead get an inferred `size(sh) > 0`
-    * filter pushed below the exchange), so the exchange subtrees stay
-    * identical, AQE reuses the stage, and the kernel runs once per
-    * call. */
-  private def withShingles(docs: DataFrame, idCol: String, textCol: String,
-                           k: Int): DataFrame = {
+    * kernel. The kernel reads the narrow (id, text) rows hash-exchanged
+    * on id at the session's shuffle width, so it runs as that many
+    * tasks even when the input is a single scan split. */
+  private def shingled(docs: DataFrame, idCol: String, textCol: String,
+                       k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val width = spark.sessionState.conf.numShufflePartitions
     docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-      .repartition(width, col("id"))
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("id"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, text) => (id, shingleHashes(text, k)) })
       .toDF("id", "sh")
-      .repartition(width, col("id"))
   }
 
+  /** [[shingled]] hash-partitioned on id at the session's shuffle
+    * width; the text shuffle before the kernel is a fraction of this
+    * shingle-array shuffle. Every consumer of one call that needs both
+    * sides of a pair reads this exchange: the postings and banding
+    * flatMaps, the id-side ranks of the prefix plan, and both
+    * exact-verify join sides (which join on the aliased id and inherit
+    * this partitioning through the alias). All of them read the table
+    * whole (a typed flatMap deserializes both columns; an explode would
+    * instead get an inferred `size(sh) > 0` filter pushed below the
+    * exchange), so the exchange subtrees stay identical, AQE reuses the
+    * stage, and the kernel runs once per query. */
+  private def byId(sh: DataFrame): DataFrame =
+    sh.repartition(sh.sparkSession.sessionState.conf.numShufflePartitions, col("id"))
+
   /** Inverted postings (shingle, id): a typed flatMap over
-    * [[withShingles]]. */
+    * [[shingled]] rows. */
   private def postings(sh: DataFrame): DataFrame = {
     val spark = sh.sparkSession
     import spark.implicits._
@@ -123,16 +134,52 @@ object Dedup {
   }
 
   /** The postings hash-partitioned on the shingle, and their FULL
-    * per-shingle document-frequency table. The df count is a typed
-    * groupByKey, which deserializes whole postings rows: Catalyst then
-    * prunes no column below the exchange, and the df table and the
-    * postings share ONE postings shuffle. */
+    * per-shingle document-frequency table: the fallback of
+    * [[collectDf]]. The df count is a typed groupByKey, which
+    * deserializes whole postings rows: Catalyst then prunes no column
+    * below the exchange, and the df table and the postings share ONE
+    * postings shuffle. */
   private def postingsWithDf(sh: DataFrame): (DataFrame, DataFrame) = {
     val spark = sh.sparkSession
     import spark.implicits._
     val bySh = postings(sh).repartition(
       spark.sessionState.conf.numShufflePartitions, col("shingle"))
     (bySh, bySh.as[(Long, Long)].groupByKey(_._1).count().toDF("shingle", "df"))
+  }
+
+  /** The FULL per-shingle document frequency as two arrays, shingles
+    * ascending (signed, for binary search) and their dfs alongside. */
+  private[ops] final case class DfTable(shingles: Array[Long], dfs: Array[Long])
+
+  /** Broadcast bytes per [[DfTable]] entry: a shingle and its df. */
+  private val DfEntryBytes = 16L
+
+  /** The df table of the kernel output `sh`, collected when it fits the
+    * session's `spark.sql.autoBroadcastJoinThreshold` at
+    * [[DfEntryBytes]] per entry (655,360 shingles at the 10 MB
+    * default). The count is a map-side partial aggregate over the
+    * kernel's tasks, so at most (distinct shingles x width) rows cross
+    * its exchange, and the fetch is a bounded `limit(bound + 1)` probe.
+    * None, the probe skipped, when broadcasts are disabled (a negative
+    * threshold); None after the probe when the table exceeds the bound
+    * (a real-text vocabulary grows with the corpus), and the caller
+    * keeps the postings exchange of [[postingsWithDf]]. The probe is a
+    * query of its own and runs the shingle kernel once more. */
+  private def collectDf(sh: DataFrame): Option[DfTable] = {
+    val spark = sh.sparkSession
+    import spark.implicits._
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold < 0) None
+    else {
+      val bound = math.min(threshold / DfEntryBytes, Int.MaxValue - 1L).toInt
+      val rows = postings(sh).groupBy("shingle").count().as[(Long, Long)]
+        .limit(bound + 1).collect()
+      if (rows.length > bound) None
+      else {
+        val sorted = rows.sortBy(_._1)
+        Some(DfTable(sorted.map(_._1), sorted.map(_._2)))
+      }
+    }
   }
 
   /** Exact Jaccard on two sorted long arrays (merge intersect). */
@@ -175,19 +222,26 @@ object Dedup {
     common.toDouble / (la + lb - common)
   }
 
+  /** Slots of each candidate task's [[LshUtil.RepeatFilter]]: 1 MB of
+    * table, exact over 49,152 distinct pairs at a time. */
+  private val CandidateFilterSlots = 1 << 16
+
   /** (id_a, id_b) of every pair [[LshUtil.groupPairs]] yields over
     * rows in [[LshUtil.sortedGroups]] order: groups of 2..cap rows give
     * their `admit`-ted pairs, larger groups the hub-star of `starSpan`
-    * members. Repeats across groups are left to the verify's dedup,
-    * and a repeated doc id never pairs with itself. */
+    * members. A pair shared by several groups of one task leaves the
+    * task once while the task's [[LshUtil.RepeatFilter]] holds it;
+    * repeats across tasks and those the filter let through are left to
+    * the verify's dedup. A repeated doc id never pairs with itself. */
   private def candidatePairs[R](rows: Dataset[R], cap: Int, starSpan: Int, id: R => Long)(
       sameKey: (R, R) => Boolean,
       admit: (R, R) => Boolean = (_: R, _: R) => true): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
     rows.mapPartitions { it =>
+      val seen = new LshUtil.RepeatFilter(CandidateFilterSlots)
       LshUtil.groupPairs(it, cap, starSpan)(sameKey, admit).collect {
-        case (a, b) if id(a) < id(b) => (id(a), id(b))
+        case (a, b) if id(a) < id(b) && seen.firstSeen(id(a), id(b)) => (id(a), id(b))
       }
     }.toDF("id_a", "id_b")
   }
@@ -209,7 +263,9 @@ object Dedup {
     * is — the fact the plan-equivalence proof in [[ngramJaccardPairs]]
     * rests on. `n` is the doc's shingle count. Input is
     * [[postingsWithDf]]; the rank is one id exchange plus a sorted
-    * streaming pass that buffers one doc's postings at a time. */
+    * streaming pass that buffers one doc's postings at a time. This is
+    * the fallback of [[rankedById]], which gives the same rows in the
+    * same order per doc. */
   private def rankedPostings(bySh: DataFrame, dfc: DataFrame): DataFrame = {
     val spark = bySh.sparkSession
     import spark.implicits._
@@ -231,6 +287,45 @@ object Dedup {
           }
         }.flatten
       }.toDF("shingle", "id", "n", "df", "rn")
+  }
+
+  /** The [[rankedPostings]] rows from the collected df table
+    * ([[collectDf]]): one typed flatMap over the (id, sh) rows, ranking
+    * each doc where its row already is ([[rankDoc]]), with no sort,
+    * join or exchange. */
+  private def rankedById(sh: DataFrame, table: DfTable): DataFrame = {
+    val spark = sh.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(table)
+    sh.as[(Long, Array[Long])]
+      .flatMap { case (id, s) => rankDoc(id, s, bc.value) }
+      .toDF("shingle", "id", "n", "df", "rn")
+  }
+
+  /** The ranked postings (shingle, id, n, df, rn) of one doc, rn = 1..n,
+    * from its sorted distinct shingles `sh` and the df table. `sh`
+    * rotated to start at its first non-negative value is in unsigned
+    * order, so one primitive sort of (df << 32 | unsigned position)
+    * gives the (df asc, shingle unsigned asc) order with no comparator
+    * (dfs stay below 2^31). A shingle missing from the table means the
+    * input changed between the df probe and this query. */
+  private[ops] def rankDoc(id: Long, sh: Array[Long], t: DfTable)
+      : Iterator[(Long, Long, Int, Long, Int)] = {
+    val n = sh.length
+    var first = 0
+    while (first < n && sh(first) < 0) first += 1
+    def unsigned(u: Int): Long = sh((first + u) % n)
+    val keys = new Array[Long](n)
+    var u = 0
+    while (u < n) {
+      val at = java.util.Arrays.binarySearch(t.shingles, unsigned(u))
+      if (at < 0) throw new IllegalStateException(
+        s"doc $id: shingle ${unsigned(u)} is not in the df table; the input changed after the df probe")
+      keys(u) = (t.dfs(at) << 32) | u
+      u += 1
+    }
+    java.util.Arrays.sort(keys)
+    Iterator.tabulate(n)(r => (unsigned((keys(r) & 0xFFFFFFFFL).toInt), id, n, keys(r) >>> 32, r + 1))
   }
 
   /** Bytes-per-document divisor for the size-based plan gate below:
@@ -280,12 +375,13 @@ object Dedup {
     * IS the shingle's df, so groups of 2..maxDf give the rare pairs and
     * larger groups the star, and the full plan needs no df table.
     *
-    * ADAPTIVE plan choice: the prefix plan's df join and per-doc rank
-    * cost two extra postings shuffles that only pay off once the pair
-    * stage would otherwise dominate — the sf1 bench measured
-    * full-index 88 s vs prefix 16 s at 50k docs, while at 5k docs
-    * prefix is pure overhead. Below `prefixMinDocs` (decided from plan
-    * statistics — see [[estimatedDocs]]; pass `numDocsHint` when the
+    * ADAPTIVE plan choice: the prefix plan's df table costs a probe
+    * query that runs the shingle kernel a second time ([[collectDf]];
+    * past its bound, two extra postings shuffles instead), which only
+    * pays off once the pair stage would otherwise dominate — the sf1
+    * bench measured full-index 88 s vs prefix 16 s at 50k docs, while
+    * at 5k docs prefix is pure overhead. Below `prefixMinDocs` (decided
+    * from plan statistics — see [[estimatedDocs]]; pass `numDocsHint` when the
     * caller knows the cardinality; no count() job either way) the FULL
     * inverted index is used instead. The prefix plan feeds the kernel
     * the prefix rows of in-cap shingles plus the whole posting list of
@@ -318,14 +414,20 @@ object Dedup {
                         numDocsHint: Long = -1L): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val sh = withShingles(docs, idCol, textCol, k)
+    val kernel = shingled(docs, idCol, textCol, k)
+    val sh = byId(kernel)
     val usePrefix = prefixMinDocs == 0 ||
       (prefixMinDocs != Int.MaxValue &&
         estimatedDocs(docs, numDocsHint) >= prefixMinDocs)
     val cand =
       if (usePrefix) {
-        val (bySh, dfc) = postingsWithDf(sh)
-        val rows = rankedPostings(bySh, dfc)
+        val ranks = collectDf(kernel) match {
+          case Some(t) => rankedById(sh, t)
+          case None =>
+            val (bySh, dfc) = postingsWithDf(sh)
+            rankedPostings(bySh, dfc)
+        }
+        val rows = ranks
           .where((col("df").between(2, maxDf) && col("rn") <= prefixLen(col("n"), threshold)) ||
             col("df") > maxDf)
           .select("shingle", "id", "rn", "n")
@@ -365,31 +467,45 @@ object Dedup {
     * prefixes (see [[ngramJaccardPairs]]), indexing the doc. That is
     * the documented recall bound, tied to ground truth by the OpsSpec
     * star-recall property. `threshold` must match the pair join being
-    * instrumented. The df table and the ranked postings both come from
-    * the call's one shingle exchange. */
+    * instrumented.
+    *
+    * With the df table collected ([[collectDf]], a probe query that
+    * runs the shingle kernel once more) the over-df stats come from it
+    * and the ranks from the kernel's own tasks, so the query reads the
+    * kernel output once and shuffles only its aggregates. Past the
+    * table's bound the df table and the ranked postings both come from
+    * one shingle exchange after the id exchange. */
   def ngramShingleStats(docs: DataFrame, threshold: Double = 0.8,
                         idCol: String = "doc_id",
                         textCol: String = "text", k: Int = 5,
                         maxDf: Int = 100): DataFrame = {
-    val sh = withShingles(docs, idCol, textCol, k)
-    val (bySh, dfc) = postingsWithDf(sh)
+    val kernel = shingled(docs, idCol, textCol, k)
     val inPrefix = col("rn") <= prefixLen(col("n"), threshold)
-    // two aggregation branches: n_docs_unindexed is (all docs) − (docs
-    // with an in-cap prefix posting), and every doc has >= 1 shingle,
-    // so its rank-1 postings count the docs
-    val postAgg = rankedPostings(bySh, dfc).agg(
+    // n_docs_unindexed is (all docs) − (docs with an in-cap prefix
+    // posting), and every doc has >= 1 shingle, so its rank-1 postings
+    // count the docs
+    def postAgg(ranks: DataFrame) = ranks.agg(
       count_distinct(when(inPrefix, col("shingle"))).as("n_shingles"),
       count_distinct(when(inPrefix && col("df").between(2, maxDf), col("id")))
         .as("n_docs_indexed"),
       count(when(col("rn") === 1, 1)).as("n_docs"))
     // over-df stats come from the GLOBAL df table — the same key set
     // the pair join's star path degrades, prefix-present or not
-    val overAgg = dfc.agg(
-      sum(when(col("df") > maxDf, 1L).otherwise(0L)).as("n_overdf"),
-      sum(when(col("df") > maxDf, col("df")).otherwise(0L)).as("overdf_mass"))
-    postAgg.crossJoin(overAgg)
-      .select(col("n_shingles"), col("n_overdf"), col("overdf_mass"),
-        (col("n_docs") - col("n_docs_indexed")).as("n_docs_unindexed"))
+    val stats = collectDf(kernel) match {
+      case Some(t) =>
+        val over = t.dfs.filter(_ > maxDf)
+        // as sum() gives over an empty table
+        def total(v: Long) = if (t.dfs.isEmpty) lit(null).cast("long") else lit(v)
+        postAgg(rankedById(kernel, t)).select(col("*"),
+          total(over.length.toLong).as("n_overdf"), total(over.sum).as("overdf_mass"))
+      case None =>
+        val (bySh, dfc) = postingsWithDf(byId(kernel))
+        postAgg(rankedPostings(bySh, dfc)).crossJoin(dfc.agg(
+          sum(when(col("df") > maxDf, 1L).otherwise(0L)).as("n_overdf"),
+          sum(when(col("df") > maxDf, col("df")).otherwise(0L)).as("overdf_mass")))
+    }
+    stats.select(col("n_shingles"), col("n_overdf"), col("overdf_mass"),
+      (col("n_docs") - col("n_docs_indexed")).as("n_docs_unindexed"))
   }
 
   /** Exact-Jaccard verify of candidate (id_a, id_b) rows, repeats
@@ -450,7 +566,7 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     val rows = m / bands
-    val sh = withShingles(docs, idCol, textCol, k)
+    val sh = byId(shingled(docs, idCol, textCol, k))
     val banded = sh.as[(Long, Array[Long])]
       .flatMap { case (id, s) =>
         val sig = minhashSig(s, m)

@@ -152,4 +152,37 @@ object LshUtil {
       }
     }
   }
+
+  /** A task's filter of repeated (a, b) pairs, a != b, of fixed size:
+    * an open-addressing table of `slots` pairs (a power of two; (0, 0)
+    * marks a free slot) that starts over once three quarters full. A repeat is
+    * caught while its first copy is still in the table, so the filter
+    * is partial and an exact dedup must follow. The table is allocated
+    * on the first pair. */
+  final class RepeatFilter(slots: Int) {
+    require(Integer.bitCount(slots) == 1, s"slots must be a power of two: $slots")
+    private lazy val as = new Array[Long](slots)
+    private lazy val bs = new Array[Long](slots)
+    private var size = 0
+
+    /** False when (a, b) is in the table; else adds it. */
+    def firstSeen(a: Long, b: Long): Boolean = {
+      val home = (graft.pipeline.Corpus.mix64(a * 0x9E3779B97F4A7C15L + b) & (slots - 1)).toInt
+      var i = home
+      while (as(i) != 0L || bs(i) != 0L) {
+        if (as(i) == a && bs(i) == b) return false
+        i = (i + 1) & (slots - 1)
+      }
+      if (size >= slots / 4 * 3) {
+        java.util.Arrays.fill(as, 0L)
+        java.util.Arrays.fill(bs, 0L)
+        size = 0
+        i = home
+      }
+      as(i) = a
+      bs(i) = b
+      size += 1
+      true
+    }
+  }
 }

@@ -19,10 +19,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Bench's two canonicalization headlines), each run the way
   * `graft.Bench` times it: `count()` on Bench's session shape with
   * `SPARK_GRAFT_CPUS` cores (default 32), no warm-up (trial 1 is cold).
-  * One JSON line per (trial, leaf): wall time, rows, per stage the
-  * tasks, wall, task time, GC, shuffle read and write and spill, and the
-  * exchanges (shuffle and broadcast) in AQE's initial and final plans,
-  * and reused. `--plans` also writes `<leaf>_explain.txt` (formatted
+  * One JSON line per (trial, leaf): wall time, rows, the queries run,
+  * per stage the tasks, wall, task time, GC, shuffle read and write
+  * (bytes and rows) and spill, and the exchanges (shuffle and
+  * broadcast) in AQE's initial and final plans, and reused. `--plans` also writes `<leaf>_explain.txt` (formatted
   * explain) and `<leaf>_final.txt` (the last trial's final plan).
   *
   *   Profile <sfDir> <leaf,...|all> [trials] [--plans <dir>]
@@ -50,27 +50,26 @@ object Profile extends AdaptiveSparkPlanHelper {
 
   private val Marker = "graft.profile.marker"
 
-  /** Completed stages and the plans of finished `count()` actions. Both
+  /** Completed stages and the finished actions with their names. Both
     * listeners sit on Spark's shared listener queue, which delivers in
     * posting order: once `drain`'s marker job has arrived, so has every
     * event posted before it. */
   private final class Recorder(spark: SparkSession)
       extends SparkListener with QueryExecutionListener {
     private val stages = new ConcurrentLinkedQueue[StageInfo]()
-    private val counts = new ConcurrentLinkedQueue[QueryExecution]()
+    private val actions = new ConcurrentLinkedQueue[(String, QueryExecution)]()
     @volatile private var delivered = 0L
     private var posted = 0L
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.add(e.stageInfo)
     override def onJobStart(e: SparkListenerJobStart): Unit =
       Option(e.properties).flatMap(p => Option(p.getProperty(Marker))).foreach(m => delivered = m.toLong)
-    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-      if (f == "count") counts.add(qe)
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = actions.add(f -> qe)
     override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
 
     /** What arrived since the last drain: runs a job of no tasks and
       * polls, up to 30 s, until the bus has delivered its start. */
-    def drain(): (Seq[StageInfo], Seq[QueryExecution]) = {
+    def drain(): (Seq[StageInfo], Seq[(String, QueryExecution)]) = {
       val sc = spark.sparkContext
       posted += 1
       sc.setLocalProperty(Marker, posted.toString)
@@ -79,14 +78,24 @@ object Profile extends AdaptiveSparkPlanHelper {
       while (delivered < posted && System.nanoTime() < deadline) Thread.sleep(5)
       if (delivered < posted) System.err.println("Profile: listener events missing after 30 s")
       def take[T](q: ConcurrentLinkedQueue[T]) = Iterator.continually(q.poll()).takeWhile(_ != null).toVector
-      (take(stages), take(counts))
+      (take(stages), take(actions))
     }
   }
 
-  /** One JSON line. A shuffle-map stage is named by the exchange it
-    * writes, as the final plan prints it (with its `plan_id`). */
+  /** The operators a stage runs, from the scopes its RDDs were made in
+    * (one per physical operator), in lineage order. */
+  private def operators(si: StageInfo): String =
+    si.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name)).distinct.mkString(" <- ")
+
+  /** One JSON line. The exchange counts are those of the `count()`
+    * action's plan; `queries` counts every action the leaf ran (a leaf
+    * may run probe queries while it builds its plan). A shuffle-map
+    * stage is named by the exchange it writes, as its query's final
+    * plan prints it (with its `plan_id`); any other stage by the
+    * operators it runs ([[operators]]). */
   private def line(trial: Int, leaf: String, wall: Double, rows: Long,
-                   stages: Seq[StageInfo], plan: Option[SparkPlan]): String = {
+                   stages: Seq[StageInfo], ran: Seq[(String, QueryExecution)]): String = {
+    val plan = ran.collect { case ("count", qe) => qe.executedPlan }.lastOption
     val (initial, fin) = plan match {
       case Some(a: AdaptiveSparkPlanExec) => (Some(a.initialPlan), Some(a.executedPlan))
       case p => (p, p)
@@ -94,7 +103,7 @@ object Profile extends AdaptiveSparkPlanHelper {
     def count(p: Option[SparkPlan])(pf: PartialFunction[SparkPlan, Any]) =
       p.fold(-1)(collectWithSubqueries(_)(pf).size)
     def exchanges(p: Option[SparkPlan]) = count(p) { case e: Exchange => e }
-    val writes = fin.toSeq.flatMap(collectWithSubqueries(_) {
+    val writes = ran.flatMap(a => collectWithSubqueries(a._2.executedPlan) {
       case e: ShuffleExchangeExec => e.shuffleDependency.rdd.id -> e.simpleString(25)
     }).toMap
     def mb(bytes: Long) = bytes / 1e6
@@ -106,9 +115,10 @@ object Profile extends AdaptiveSparkPlanHelper {
         f""""shuffle_read_mb":${mb(m.shuffleReadMetrics.totalBytesRead)}%.3f,""" +
         f""""shuffle_write_mb":${mb(m.shuffleWriteMetrics.bytesWritten)}%.3f,""" +
         f""""spill_mb":${mb(m.memoryBytesSpilled + m.diskBytesSpilled)}%.3f,""" +
-        s""""name":"${MiniJson.escape(si.rddInfos.map(_.id).collectFirst(writes).getOrElse(si.name))}"}"""
+        f""""shuffle_write_rows":${m.shuffleWriteMetrics.recordsWritten},""" +
+        s""""name":"${MiniJson.escape(si.rddInfos.map(_.id).collectFirst(writes).getOrElse(operators(si)))}"}"""
     }
-    f"""{"trial":$trial,"leaf":"$leaf","wall_s":$wall%.3f,"rows":$rows,""" +
+    f"""{"trial":$trial,"leaf":"$leaf","wall_s":$wall%.3f,"rows":$rows,"queries":${ran.size},""" +
       f""""tasks":${stages.map(_.numTasks).sum},"task_s":${stages.map(_.taskMetrics.executorRunTime).sum / 1e3}%.3f,""" +
       s""""exchanges_planned":${exchanges(initial)},"exchanges_final":${exchanges(fin)},""" +
       s""""exchanges_reused":${count(fin) { case r: ReusedExchangeExec => r }},""" +
@@ -134,10 +144,10 @@ object Profile extends AdaptiveSparkPlanHelper {
       val t0 = System.nanoTime()
       val rows = leaf(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      val (stages, counts) = rec.drain()
-      val plan = counts.lastOption.map(_.executedPlan)
-      plan.foreach(p => write(s"${name}_final.txt", p.toString))
-      emit(line(trial, name, wall, rows, stages, plan))
+      val (stages, actions) = rec.drain()
+      actions.collect { case ("count", qe) => qe.executedPlan }.lastOption
+        .foreach(p => write(s"${name}_final.txt", p.toString))
+      emit(line(trial, name, wall, rows, stages, actions))
     } finally {
       spark.listenerManager.unregister(rec)
       spark.sparkContext.removeSparkListener(rec)

@@ -208,6 +208,51 @@ class PlanSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).count() == written.count())
   }
 
+  test("q28 and the q21 prefix plan rank on the id side when the df table ships") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Walk extends AdaptiveSparkPlanHelper
+    // (hashed-on columns, runs after the shingle kernel) per shuffle
+    def exchanges(p: SparkPlan): Seq[(Seq[String], Boolean)] = Walk.collectWithSubqueries(p) {
+      case e: ShuffleExchangeExec =>
+        val on = e.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+          case _ => Nil
+        }
+        on -> Walk.collect(e.child) { case m: MapPartitionsExec if readsText(m) => m }.nonEmpty
+    }
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    def finalPlan(df: org.apache.spark.sql.DataFrame): SparkPlan = {
+      df.collect()
+      df.queryExecution.executedPlan
+    }
+    def q28() = finalPlan(graft.ops.Dedup.ngramShingleStats(docs, threshold = 0.5))
+    val p28 = q28()
+    val ex28 = exchanges(p28)
+    assert(!ex28.exists(_._1 == Seq("shingle")), s"q28 shuffles postings: $p28")
+    assert(!ex28.exists { case (on, after) => on == Seq("id") && after }, s"q28 re-exchanges on id: $p28")
+    // the probe is a query of its own; the stats query runs the kernel
+    // once (the kernel: no other MapPartitions between it and the text)
+    val kernels = Walk.collectWithSubqueries(p28) {
+      case m: MapPartitionsExec if readsText(m) && !m.child.exists(_.isInstanceOf[MapPartitionsExec]) => m
+    }
+    assert(kernels.size == 1, p28)
+    val prefix = finalPlan(graft.ops.Dedup.ngramJaccardPairs(docs, threshold = 0.5, prefixMinDocs = 0))
+    val bySh = exchanges(prefix).filter(_._1 == Seq("shingle"))
+    assert(bySh.size == 1, s"prefix plan: $prefix")
+    // the candidate groups: the one shingle exchange sorted for the kernel
+    assert(prefix.toString.contains("Sort [shingle"), prefix)
+    // broadcasts disabled: today's postings and rank exchanges
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val restore = spark.conf.get(key)
+    val off = try { spark.conf.set(key, "-1"); exchanges(q28()) } finally spark.conf.set(key, restore)
+    assert(off.exists(_._1 == Seq("shingle")), off)
+    assert(off.exists { case (on, after) => on == Seq("id") && after }, off)
+  }
+
   test("whole-stage codegen covers the scan-side of aggregation queries") {
     val df = SparkEntry.queries("q02_agg_pricing")(spark, sf)
     df.collect() // AQE finalizes (and codegen-compiles) only on execution

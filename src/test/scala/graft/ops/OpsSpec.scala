@@ -244,32 +244,43 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("near-dup results are identical at 1 and 4 shuffle partitions") {
-    // the shingle kernel, the candidate groups and the exact verify run
-    // at the session's shuffle width, which must change only the speed;
-    // a small vocabulary and an identical-doc flood past the cap put
-    // over-cap hub-star groups into every result
+  /** A hostile near-dup corpus: a small vocabulary and an identical-doc
+    * flood past the cap `HostileCap` put over-cap hub-star groups into
+    * every result. */
+  private lazy val hostile: DataFrame = {
     val rnd = new scala.util.Random(61)
     val vocab = (1 to 12).map(i => s"w$i")
     val base = (0 until 120).map(_ =>
       Seq.fill(6 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
     val texts = base ++ base.take(30).map(_ + " dup") ++ Seq.fill(12)("one flooded text body")
-    val d = docs(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }: _*)
-    val cap = 8
-    def pairs(df: DataFrame): Set[(Long, Long, Double)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    def results(): Map[String, Any] = Map(
-      "q19" -> pairs(Dedup.minhashLshPairs(d, threshold = 0.5, maxBucket = cap)),
-      "q21 prefix" -> pairs(Dedup.ngramJaccardPairs(d, threshold = 0.5, maxDf = cap,
-        prefixMinDocs = 0)),
-      "q21 full" -> pairs(Dedup.ngramJaccardPairs(d, threshold = 0.5, maxDf = cap,
-        prefixMinDocs = Int.MaxValue)),
-      "q28" -> Dedup.ngramShingleStats(d, threshold = 0.5, maxDf = cap).head())
-    val key = "spark.sql.shuffle.partitions"
+    docs(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }: _*)
+  }
+  private val HostileCap = 8
+
+  private def pairs(df: DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** Both q21 plans' (pair, score) sets and q28's row on [[hostile]]. */
+  private def ngramResults(): Map[String, Any] = Map(
+    "q21 prefix" -> pairs(Dedup.ngramJaccardPairs(hostile, threshold = 0.5, maxDf = HostileCap,
+      prefixMinDocs = 0)),
+    "q21 full" -> pairs(Dedup.ngramJaccardPairs(hostile, threshold = 0.5, maxDf = HostileCap,
+      prefixMinDocs = Int.MaxValue)),
+    "q28" -> Dedup.ngramShingleStats(hostile, threshold = 0.5, maxDf = HostileCap).head())
+
+  /** `body` under each value of the session setting `key`, restored after. */
+  private def under[T](key: String, values: Seq[String])(body: => T): Seq[T] = {
     val restore = spark.conf.get(key)
-    val Seq(one, four) =
-      try Seq("1", "4").map { w => spark.conf.set(key, w); results() }
-      finally spark.conf.set(key, restore)
+    try values.map { v => spark.conf.set(key, v); body }
+    finally spark.conf.set(key, restore)
+  }
+
+  test("near-dup results are identical at 1 and 4 shuffle partitions") {
+    // the shingle kernel, the candidate groups and the exact verify run
+    // at the session's shuffle width, which must change only the speed
+    def results(): Map[String, Any] = ngramResults() +
+      ("q19" -> pairs(Dedup.minhashLshPairs(hostile, threshold = 0.5, maxBucket = HostileCap)))
+    val Seq(one, four) = under("spark.sql.shuffle.partitions", Seq("1", "4"))(results())
     one.keys.foreach { name =>
       assert(one(name) == four(name), s"$name: 1 partition ${one(name)} vs 4 ${four(name)}")
     }
@@ -278,6 +289,49 @@ class OpsSpec extends AnyFunSuite {
     }
     assert(one("q28").asInstanceOf[org.apache.spark.sql.Row].getAs[Long]("n_overdf") > 0L,
       s"no over-cap shingle: ${one("q28")}")
+  }
+
+  test("q28 and both q21 plans agree whether the df table ships, is disabled or falls through") {
+    // the default threshold ships the df table; -1 skips the probe; 64
+    // bytes bounds the table at 4 shingles, which the corpus exceeds,
+    // so the probe falls through to the postings exchange
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val settings = Seq(spark.conf.get(key), "-1", "64")
+    val runs = under("spark.sql.shuffle.partitions", Seq("1", "4")) {
+      under(key, settings)(ngramResults())
+    }.flatten
+    val q28 = runs.head("q28").asInstanceOf[org.apache.spark.sql.Row]
+    assert(q28.getAs[Long]("n_shingles") > 64 / 16, s"the table must exceed the bound: $q28")
+    assert(q28.getAs[Long]("n_overdf") > 0L, s"maxDf must bind: $q28")
+    assert(runs.head("q21 prefix") == runs.head("q21 full"))
+    runs.zipWithIndex.tail.foreach { case (r, i) =>
+      val setting = s"${settings(i % 3)} at ${if (i < 3) 1 else 4} partitions"
+      r.keys.foreach(name => assert(r(name) == runs.head(name), s"$name under $setting"))
+    }
+  }
+
+  test("id-side rank: df ascending, equal df unsigned, ranks 1..n") {
+    def table(dfOf: Map[Long, Long]) = {
+      val s = dfOf.keys.toArray.sorted
+      Dedup.DfTable(s, s.map(dfOf))
+    }
+    // equal df: 3 sorts before -5 unsigned; the rarer 7 comes first
+    val sh = Array(-5L, 3L, 7L)
+    val got = Dedup.rankDoc(42L, sh, table(Map(-5L -> 2L, 3L -> 2L, 7L -> 1L, 9L -> 5L))).toSeq
+    assert(got == Seq((7L, 42L, 3, 1L, 1), (3L, 42L, 3, 2L, 2), (-5L, 42L, 3, 2L, 3)), got)
+    // a text shorter than k is one shingle of rank 1
+    val short = Dedup.shingleHashes("abc", 5)
+    assert(short.length == 1)
+    assert(Dedup.rankDoc(1L, short, table(Map(short(0) -> 4L))).toSeq ==
+      Seq((short(0), 1L, 1, 4L, 1)))
+    // ranks are exactly 1..n, in (df, unsigned shingle) order
+    val rnd = new scala.util.Random(5)
+    val set = Array.fill(60)(rnd.nextLong()).distinct.sorted
+    val dfOf = set.map(_ -> (1L + rnd.nextInt(4))).toMap
+    val ranked = Dedup.rankDoc(9L, set, table(dfOf)).toSeq
+    assert(ranked.map(_._5) == (1 to set.length))
+    assert(ranked.forall(r => r._2 == 9L && r._3 == set.length && r._4 == dfOf(r._1)))
+    assert(ranked.map(_._1) == set.toSeq.sortBy(s => (dfOf(s), s ^ Long.MinValue)))
   }
 
   test("PROPERTY: adaptive plans emit identical sets when maxDf BINDS") {

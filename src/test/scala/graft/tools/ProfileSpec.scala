@@ -14,7 +14,7 @@ class ProfileSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("one JSON line per (trial, leaf) with rows, stages, tasks and final exchanges") {
-    val leaves = Seq("q21_ngram_jaccard", "q27_kg_canon")
+    val leaves = Seq("q21_ngram_jaccard", "q27_kg_canon", "q28_jaccard_stats")
     val lines = Vector.newBuilder[String]
     Profile.run(spark, sf, leaves, trials = 2, plans = None)(lines += _)
     val objs = lines.result().map(MiniJson.parse(_).asInstanceOf[JObj])
@@ -32,6 +32,11 @@ class ProfileSpec extends AnyFunSuite {
       assert(stages.nonEmpty, leaf)
       assert(num(o, "tasks") > 0, leaf)
       stages.foreach(s => assert(num(s.asInstanceOf[JObj], "tasks") > 0, leaf))
+      // every stage is named by its exchange or its operators, never by
+      // the thread pool that submitted its job
+      stages.map(_.asInstanceOf[JObj].str("name").get).foreach { n =>
+        assert(n.nonEmpty && !n.contains("CompletableFuture"), s"$leaf: $n")
+      }
       assert(num(o, "exchanges_final") >= 1, leaf)
     }
   }

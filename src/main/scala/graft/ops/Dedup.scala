@@ -1,5 +1,6 @@
 package graft.ops
 
+import java.util.Locale
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
@@ -11,13 +12,17 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
   * simhash chunks / shared rare shingles) bounds pair enumeration to
   * same-bucket pairs; exact verification runs only on candidates.
   * Candidates come from ONE streaming kernel over key-sorted rows
-  * ([[LshUtil.groupPairs]]): LSH band buckets (q19), simhash chunks
-  * (q20) and shingle postings (q21) each take one hash exchange on the
-  * key and one pass per key group. Hot groups (boilerplate /
-  * identical-content corpora) are guarded: groups larger than the cap
-  * degrade from all-pairs to STAR candidates (the group's min id ↔
-  * its members) — O(n) instead of O(n²) while preserving
-  * duplicate-cluster connectivity.
+  * ([[LshUtil.groupPairs]]) with one pass per key group. LSH band
+  * buckets (q19), simhash chunks (q20) and the prefix plan's shingle
+  * postings (q21) take one hash exchange on the key, sorted by
+  * (key, id). q21's full plan takes one exchange of posting LISTS on
+  * the shingle, each task's lists cut to the maxDf + 1 smallest ids
+  * that the kernel can read ([[postingLists]]), and joins each
+  * shingle's lists into the same rows ([[mergedPostings]]).
+  * Hot groups (boilerplate / identical-content corpora) are guarded:
+  * groups larger than the cap degrade from all-pairs to STAR
+  * candidates (the group's min id ↔ its members) — O(n) instead of
+  * O(n²) while preserving duplicate-cluster connectivity.
   *
   * Signature computation (shingles, minhash, simhash) runs as typed
   * per-partition JVM kernels: these are tight per-row loops where
@@ -35,7 +40,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
   * small result as one file. Each candidate task drops the repeated
   * pairs it still holds before that exchange ([[LshUtil.RepeatFilter]]).
   *
-  * Postings move only where a plan needs them grouped by shingle. The
+  * Postings move only where a plan needs them grouped by shingle, and
+  * the full q21 plan moves them as lists. The
   * per-shingle df that q28 and q21's prefix plan rank by is counted
   * with a map-side partial aggregate over the kernel's tasks, collected
   * by a bounded probe and broadcast ([[collectDf]]), and each doc's
@@ -69,16 +75,18 @@ object Dedup {
 
   private val WsRe = java.util.regex.Pattern.compile("\\s+")
 
-  /** Distinct k-gram shingle hashes of the normalized text, sorted.
-    * Shingle id = md5Long of the k-char window. Primitive kernel
-    * (round 6): hashes go into a long[] sorted + deduped in place,
-    * and each window is digested via [[LshUtil.md5LongRange]] — the
-    * previous TreeSet[java.lang.Long] + substring + getBytes path
-    * allocated ~120 B per window (boxed node + String + byte[]),
-    * millions of times per task across the three consumers of the
-    * shingle table. Output is bit-identical (sorted distinct longs). */
+  /** Distinct k-gram shingle hashes of the normalized text (lowercased
+    * in the root locale, whatever the JVM's default, as DuckDB's
+    * `lower`; whitespace runs made one space), sorted. Shingle id =
+    * md5Long of the k-char window. Primitive kernel (round 6): hashes
+    * go into a long[] sorted + deduped in place, and each window is
+    * digested via [[LshUtil.md5LongRange]] — the previous
+    * TreeSet[java.lang.Long] + substring + getBytes path allocated
+    * ~120 B per window (boxed node + String + byte[]), millions of
+    * times per task across the three consumers of the shingle table.
+    * Output is bit-identical (sorted distinct longs). */
   def shingleHashes(text: String, k: Int = 5): Array[Long] = {
-    val norm = WsRe.matcher(text.toLowerCase).replaceAll(" ")
+    val norm = WsRe.matcher(text.toLowerCase(Locale.ROOT)).replaceAll(" ")
     if (norm.length < k) return Array(md5Long(norm))
     val n = norm.length - k + 1
     val arr = new Array[Long](n)
@@ -123,14 +131,112 @@ object Dedup {
   private def byId(sh: DataFrame): DataFrame =
     sh.repartition(sh.sparkSession.sessionState.conf.numShufflePartitions, col("id"))
 
-  /** Inverted postings (shingle, id): a typed flatMap over
-    * [[shingled]] rows. */
+  /** Inverted postings (shingle, id), one row per posting: a typed
+    * flatMap over [[shingled]] rows. The df probe of [[collectDf]] and
+    * the fallback of [[postingsWithDf]] read them; the full q21 plan
+    * ships [[postingLists]] instead. */
   private def postings(sh: DataFrame): DataFrame = {
     val spark = sh.sparkSession
     import spark.implicits._
     sh.as[(Long, Array[Long])]
       .flatMap { case (id, s) => s.iterator.map(x => (x, id)) }
       .toDF("shingle", "id")
+  }
+
+  /** Postings a full-plan task reads before it ships them as lists:
+    * 2^18, 2 MB of shingles. */
+  private val PostingListBudget = 1 << 18
+
+  /** A task's postings as (shingle, ids) lists, the rows of the full
+    * q21 plan's shingle exchange: ids ascending, repeats kept, each
+    * list cut to its first `keep` ids. The task reads docs until they
+    * hold `budget` postings, ships one list per shingle of them
+    * ([[shingleLists]]) and starts over, so it holds one flush of docs
+    * (`budget` postings and the rest of the last doc read) however
+    * large its partition; a shingle of several flushes leaves the task
+    * as several lists, which [[mergedPostings]] joins. */
+  private[ops] def postingLists(docs: Iterator[(Long, Array[Long])], keep: Int,
+                                budget: Int = PostingListBudget)
+      : Iterator[(Long, Array[Long])] =
+    new Iterator[Iterator[(Long, Array[Long])]] {
+      def hasNext: Boolean = docs.hasNext
+      def next(): Iterator[(Long, Array[Long])] = {
+        val flush = new scala.collection.mutable.ArrayBuffer[(Long, Array[Long])]
+        var held = 0
+        while (held < budget && docs.hasNext) {
+          val d = docs.next()
+          flush += d
+          held += d._2.length
+        }
+        shingleLists(flush.toArray, keep)
+      }
+    }.flatten
+
+  /** One (shingle, ids) list per distinct shingle of `docs`, shingles
+    * ascending, ids ascending with repeats kept, cut to the first
+    * `keep`: a heap merge of the docs' sorted shingle arrays on
+    * (shingle, id), which allocates nothing per posting. */
+  private def shingleLists(docs: Array[(Long, Array[Long])], keep: Int)
+      : Iterator[(Long, Array[Long])] = {
+    val at = new Array[Int](docs.length) // each doc's next shingle
+    def sh(d: Int): Long = docs(d)._2(at(d))
+    def before(x: Int, y: Int): Boolean =
+      sh(x) < sh(y) || (sh(x) == sh(y) && docs(x)._1 < docs(y)._1)
+    val heap = docs.indices.filter(docs(_)._2.nonEmpty).toArray
+    var live = heap.length
+    def siftDown(from: Int): Unit = {
+      var i = from
+      var c = 2 * i + 1
+      while (c < live) {
+        if (c + 1 < live && before(heap(c + 1), heap(c))) c += 1
+        if (before(heap(c), heap(i))) {
+          val t = heap(i); heap(i) = heap(c); heap(c) = t
+          i = c
+          c = 2 * i + 1
+        } else c = live
+      }
+    }
+    (live / 2 - 1 to 0 by -1).foreach(siftDown)
+    val ids = new scala.collection.mutable.ArrayBuilder.ofLong
+    new Iterator[(Long, Array[Long])] {
+      def hasNext: Boolean = live > 0
+      def next(): (Long, Array[Long]) = {
+        val s = sh(heap(0))
+        ids.clear()
+        var taken = 0
+        while (live > 0 && sh(heap(0)) == s) {
+          val d = heap(0)
+          if (taken < keep) { ids += docs(d)._1; taken += 1 }
+          at(d) += 1
+          if (at(d) == docs(d)._2.length) { live -= 1; heap(0) = heap(live) }
+          siftDown(0)
+        }
+        (s, ids.result())
+      }
+    }
+  }
+
+  /** The (shingle, id) postings of [[postingLists]] rows sorted by
+    * shingle, as the full q21 plan's candidate kernel reads them: each
+    * shingle's lists joined, ids ascending, cut to the first `keep`.
+    * Every list holds the smallest ids of its part of the shingle's
+    * postings, so these are the first `keep` rows of the shingle's
+    * group in [[LshUtil.sortedGroups]] order. */
+  private[ops] def mergedPostings(lists: Iterator[(Long, Array[Long])], keep: Int)
+      : Iterator[(Long, Long)] = {
+    val it = lists.buffered
+    val ids = new scala.collection.mutable.ArrayBuilder.ofLong
+    new Iterator[Iterator[(Long, Long)]] {
+      def hasNext: Boolean = it.hasNext
+      def next(): Iterator[(Long, Long)] = {
+        val s = it.head._1
+        ids.clear()
+        while (it.hasNext && it.head._1 == s) ids ++= it.next()._2
+        val all = ids.result()
+        java.util.Arrays.sort(all)
+        all.iterator.take(keep).map(s -> _)
+      }
+    }.flatten
   }
 
   /** The postings hash-partitioned on the shingle, and their FULL
@@ -227,7 +333,8 @@ object Dedup {
   private val CandidateFilterSlots = 1 << 16
 
   /** (id_a, id_b) of every pair [[LshUtil.groupPairs]] yields over
-    * rows in [[LshUtil.sortedGroups]] order: groups of 2..cap rows give
+    * rows in [[LshUtil.sortedGroups]] order (or [[mergedPostings]]
+    * order, the same rows cut past cap + 1): groups of 2..cap rows give
     * their `admit`-ted pairs, larger groups the hub-star of `starSpan`
     * members. A pair shared by several groups of one task leaves the
     * task once while the task's [[LshUtil.RepeatFilter]] holds it;
@@ -371,9 +478,18 @@ object Dedup {
     *
     * Both plans run the postings through the one candidate kernel
     * ([[LshUtil.groupPairs]] with cap = starSpan = maxDf) after a
-    * single shingle exchange sorted by (shingle, id): a posting group
-    * IS the shingle's df, so groups of 2..maxDf give the rare pairs and
-    * larger groups the star, and the full plan needs no df table.
+    * single shingle exchange: a posting group IS the shingle's df, so
+    * groups of 2..maxDf give the rare pairs and larger groups the star,
+    * and the full plan needs no df table. The prefix plan's exchange
+    * carries its rows sorted by (shingle, id). The full plan's carries
+    * (shingle, ids) lists, one per shingle per task flush
+    * ([[postingLists]]), each cut to its smallest maxDf + 1 ids, which
+    * the candidate task sorts by shingle and joins ([[mergedPostings]]).
+    * The cut is exact: the kernel reads all of a group of at most
+    * maxDf rows, and of a larger one only its first maxDf + 1 rows (the
+    * hub and the next maxDf ids); the smallest maxDf + 1 ids of a
+    * union lie among the smallest maxDf + 1 of each part, and a group
+    * cut at maxDf + 1 rows is still past the cap.
     *
     * ADAPTIVE plan choice: the prefix plan's df table costs a probe
     * query that runs the shingle kernel a second time ([[collectDf]];
@@ -448,9 +564,18 @@ object Dedup {
           _._1 == _._1,
           (a, b) => 1 + math.min(a._4 - a._3, b._4 - b._3) >=
             math.floor(threshold * (a._4 + b._4) / (1.0 + threshold)))
-      } else
-        candidatePairs(LshUtil.sortedGroups(postings(sh), "shingle")
-            .as[(Long, Long)], maxDf, maxDf, (r: (Long, Long)) => r._2)(_._1 == _._1)
+      } else {
+        // the kernel reads at most maxDf + 1 rows of a group
+        val keep = math.min(maxDf.toLong + 1, Int.MaxValue).toInt
+        val lists = sh.as[(Long, Array[Long])]
+          .mapPartitions(postingLists(_, keep))
+          .toDF("shingle", "ids")
+          .repartition(spark.sessionState.conf.numShufflePartitions, col("shingle"))
+          .sortWithinPartitions("shingle")
+          .as[(Long, Array[Long])]
+        candidatePairs(lists.mapPartitions(mergedPostings(_, keep)), maxDf, maxDf,
+            (r: (Long, Long)) => r._2)(_._1 == _._1)
+      }
     verifyJaccard(cand, sh, threshold)
   }
 
@@ -584,13 +709,14 @@ object Dedup {
     verifyJaccard(cand, sh, threshold)
   }
 
-  /** 64-bit SimHash over whitespace tokens (typed kernel). Bit b of
+  /** 64-bit SimHash over the whitespace tokens of the text lowercased
+    * in the root locale (typed kernel). Bit b of
     * token hash = bit (3 - b%4) of hex digit b/4 of md5(token) —
     * exactly reproducible in SQL from `md5(tok)`. Sim bit b is set
     * when a majority of tokens have it set. */
   def simhash64(text: String): Long = {
     val counts = new Array[Int](64)
-    val toks = text.toLowerCase.split(" +")
+    val toks = text.toLowerCase(Locale.ROOT).split(" +")
     var t = 0
     while (t < toks.length) {
       val w = md5Long(toks(t)) // bit b (hex order) = bit 63-b of w

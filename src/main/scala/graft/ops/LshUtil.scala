@@ -97,9 +97,10 @@ object LshUtil {
 
   /** The streaming candidate kernel of every bucketed operator, over
     * rows in [[sortedGroups]] order (each key group contiguous, ids
-    * ascending and distinct within a group):
+    * ascending within a group; a repeated doc id gives equal rows side
+    * by side, whose pairs with each other the caller drops):
     *  - a group of at most `cap` rows yields each of its pairs that
-    *    `admit` accepts, earlier row first, so id_a < id_b;
+    *    `admit` accepts, earlier row first, so id_a <= id_b;
     *  - a larger group is a hot bucket and yields hub-star pairs only:
     *    its first row (the min id) with each of the next `starSpan`
     *    rows, the rest of the group skipped. Star pairs bypass `admit`.

@@ -13,7 +13,8 @@ package graft.rdf
   * `/root/reference/src/lib.rs:116-119`); not a translation.
   *
   * Language tags are lowercased (canonical N-Quads requires lowercase
-  * language tags; every fixture tag is already lowercase).
+  * language tags; every fixture tag is already lowercase) in the root
+  * locale, so a tag does not depend on the JVM's default locale.
   */
 object NQuadsParser {
 
@@ -95,7 +96,7 @@ object NQuadsParser {
             val start = i
             while (i < n && (line.charAt(i).isLetterOrDigit || line.charAt(i) == '-')) i += 1
             if (i == start) fail("empty language tag")
-            (TermKind.Literal, lex, "", line.substring(start, i).toLowerCase)
+            (TermKind.Literal, lex, "", line.substring(start, i).toLowerCase(java.util.Locale.ROOT))
           } else if (i + 1 < n && line.charAt(i) == '^' && line.charAt(i + 1) == '^') {
             i += 2
             val dt = parseIriRef()

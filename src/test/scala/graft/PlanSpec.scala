@@ -253,6 +253,33 @@ class PlanSpec extends AnyFunSuite {
     assert(off.exists { case (on, after) => on == Seq("id") && after }, off)
   }
 
+  test("the q21 full plan ships posting lists on the shingle, and sorts them by shingle only") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.ArrayType
+    object Walk extends AdaptiveSparkPlanHelper
+    def names(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[String] =
+      es.collect { case a: Attribute => a.name }
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val df = graft.ops.Dedup.ngramJaccardPairs(docs, threshold = 0.5, prefixMinDocs = Int.MaxValue)
+    df.collect()
+    val p = df.queryExecution.executedPlan
+    val bySh = Walk.collectWithSubqueries(p) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning => names(h.expressions) == Seq("shingle")
+        case _ => false
+      }) => e
+    }
+    assert(bySh.size == 1, p)
+    assert(bySh.head.output.exists(_.dataType.isInstanceOf[ArrayType]), bySh.head.output)
+    val sorts = Walk.collectWithSubqueries(p) { case s: SortExec => names(s.sortOrder.map(_.child)) }
+    assert(sorts.contains(Seq("shingle")), p)
+    assert(!sorts.contains(Seq("shingle", "id")), p)
+  }
+
   test("whole-stage codegen covers the scan-side of aggregation queries") {
     val df = SparkEntry.queries("q02_agg_pricing")(spark, sf)
     df.collect() // AQE finalizes (and codegen-compiles) only on execution

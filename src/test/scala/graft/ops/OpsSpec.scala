@@ -218,6 +218,62 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("posting lists cut at cap + 1 give the row path's candidate pairs") {
+    // the full q21 plan ships each task's postings as (shingle, ids)
+    // lists cut to the first cap + 1 ids and joins them per shingle;
+    // docs 0 and 500 come twice, so ids repeat within every group, and
+    // a flush budget of 4 postings makes a task ship several lists for
+    // one shingle
+    val cap = 5
+    val rnd = new scala.util.Random(13)
+    val sizes = Seq(cap - 1, cap, cap + 1, 3 * cap)
+    val groups = sizes.zipWithIndex.map { case (g, k) =>
+      (k * 7919L - 3L) -> (Seq(0L, 500L) ++
+        rnd.shuffle((1L until 1000L).filter(_ != 500L).toVector).take(g - 4))
+    }
+    val shinglesOf = groups.flatMap { case (s, ids) => ids.map(_ -> s) }.groupMap(_._1)(_._2)
+    val docs = rnd.shuffle(shinglesOf.toVector.flatMap { case (id, s) =>
+      Seq.fill(if (id == 0L || id == 500L) 2 else 1)(id -> s.sorted.toArray)
+    })
+    def pairs(rows: Iterator[(Long, Long)]): Vector[(Long, Long, Long)] =
+      LshUtil.groupPairs(rows, cap, cap)(_._1 == _._1)
+        .map { case (a, b) => (a._1, a._2, b._2) }.toVector
+    val rowPath = pairs(docs.flatMap { case (id, s) => s.map(_ -> id) }.sorted.iterator)
+    assert(rowPath.map(_._1).distinct.size == sizes.size, rowPath)
+    val tasks = docs.grouped(docs.size / 3 + 1).toVector
+    for (budget <- Seq(Some(4), None)) {
+      val lists = tasks.map { t =>
+        budget.fold(Dedup.postingLists(t.iterator, cap + 1))(
+          Dedup.postingLists(t.iterator, cap + 1, _)).toVector
+      }
+      // lists beyond one per shingle per task: only a tiny budget flushes
+      val flushes = lists.map(l => l.size - l.map(_._1).distinct.size).sum
+      assert(if (budget.isDefined) flushes > 0 else flushes == 0, s"budget $budget: $flushes")
+      lists.flatten.foreach { case (s, ids) =>
+        assert(ids.length <= cap + 1 && ids.toSeq == ids.sorted.toSeq, s"$s: ${ids.toSeq}")
+      }
+      // the exchange brings each shingle's lists together in any order
+      val bySh = rnd.shuffle(lists.flatten).sortBy(_._1)
+      assert(pairs(Dedup.mergedPostings(bySh.iterator, cap + 1)) == rowPath, s"budget $budget")
+    }
+  }
+
+  test("shingles, simhash and language tags lowercase alike under a Turkish default locale") {
+    // tr-TR lowercases "I" to a dotless i, which DuckDB's lower() does not
+    val text = "IIIII DIGITAL INDEX Istanbul"
+    def results() = (Dedup.shingleHashes(text).toSeq, Dedup.simhash64(text),
+      graft.rdf.NQuadsParser.parseDocument("<urn:s> <urn:p> \"x\"@EN-LATIN .\n").head.oLang)
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.ROOT)
+      val root = results()
+      assert(root._3 == "en-latin")
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+      assert("I".toLowerCase != "i")
+      assert(results() == root)
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("hot-group cutoff at cap-1, cap and cap+1 identical docs (q21 maxDf, q19 maxBucket)") {
     // identical docs: every shingle has df = g and every LSH bucket
     // holds all g docs, so the emitted pairs (all at jaccard 1.0) are
